@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Central table loaders for the driver-generated parquet test data
   * (see TESTDATA.md). Every operator reads through here so column
@@ -10,11 +11,58 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * At 100 TB these would be partitioned/bucketed table reads; here
   * they are plain parquet files. The loaders deliberately avoid any
   * `.cache()` so each query's plan shows its true scan shape.
+  *
+  * What a table's footer says is memoized per file VERSION (see
+  * [[footers]]): the inferred schema, and for `events` whether a
+  * long-typed `ts` holds nanos. Inferring a schema reopens the footer
+  * and runs a one-task schema-merge job, which a planner that already
+  * knows the schema should not pay on every load. Data is never
+  * cached: every load still lists the file and every query still
+  * scans it.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** One table file's footer facts: the schema Spark infers for it,
+    * and — for `events` only — whether a long-typed `ts` holds NANOS.
+    * `nanosAsLong=true` makes TIMESTAMP(NANOS) arrive as LongType,
+    * but a generator round shipping plain INT64 micros (a third
+    * plausible encoding) would arrive as LongType too — and an
+    * unconditional div-1000 would silently shrink every timestamp
+    * 1000×. One sampled value settles it: epoch-nanos for any
+    * plausible event date is ~1.7e18, epoch-micros ~1.7e15 — the
+    * 1e17 threshold (year ~5138 in micros) cannot misfire. */
+  private final case class Footer(schema: StructType, tsNanos: Boolean)
+
+  /** Footer memo, keyed by [[footerKey]]: path, file version and the
+    * session's parquet inference settings, so a rewritten file or a
+    * changed setting re-infers. It holds metadata, never results, and
+    * like the other artifact memos it survives `Dedup.clearCaches()`. */
+  private val footers =
+    new java.util.concurrent.ConcurrentHashMap[String, Footer]()
+
+  /** The session settings that change what parquet schema inference
+    * returns for a given file. */
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  /** Memo key for one table path: the path, its file version (file
+    * count, total length and newest modification time over the files
+    * it lists — a plain file lists as itself) and the values of
+    * [[inferenceConfs]] in this session. */
+  private def footerKey(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+    val version = Seq(files.size, files.map(_.getLen).sum,
+      files.map(_.getModificationTime).maxOption.getOrElse(0L))
+    ((path +: version) ++ inferenceConfs.map(spark.conf.get)).mkString("|")
+  }
 
   /** Read one table. Two session-level settings make the driver's
     * parquet readable and oracle-comparable:
@@ -34,44 +82,33 @@ object Tables {
     * files (the round-9 bench crash). Either encoding now lands on
     * the same TIMESTAMP-micros column, so every downstream operator
     * and oracle sees identical values regardless of generator round.
+    *
+    * The schema comes from the [[footers]] memo, so only the first
+    * load of a file version infers it (plus, for a long-typed
+    * `events.ts`, one 1-row nanos probe); every later load plans
+    * without launching a job.
     */
-  /** Memoized per events file: does a long-typed `ts` hold NANOS?
-    * `nanosAsLong=true` makes TIMESTAMP(NANOS) arrive as LongType,
-    * but a generator round shipping plain INT64 micros (a third
-    * plausible encoding) would arrive as LongType too — and an
-    * unconditional div-1000 would silently shrink every timestamp
-    * 1000×. One sampled value settles it: epoch-nanos for any
-    * plausible event date is ~1.7e18, epoch-micros ~1.7e15 — the
-    * 1e17 threshold (year ~5138 in micros) cannot misfire. Probed
-    * once per file per process (one 1-row job on first long-typed
-    * load only). */
-  private val nanosProbe =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType) {
-        val isNanos = graft.operators.Dedup.dirMemo(
-          nanosProbe, s"$dir/$name.parquet") {
-          val sample = raw.select(col("ts")).filter(col("ts").isNotNull).head(1)
-          // Empty table: either scale maps to the same zero rows —
-          // keep the nanos interpretation (the encoding that has
-          // actually shipped long-typed so far).
-          java.lang.Boolean.valueOf(
-            sample.isEmpty || math.abs(sample(0).getLong(0)) >= 100000000000000000L)
-        }
-        if (isNanos.booleanValue())
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        else raw.withColumn("ts", timestamp_micros(col("ts")))
-      } else raw
-    } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val path = s"$dir/$name.parquet"
+    val footer = graft.operators.Dedup.dirMemo(footers, footerKey(spark, path)) {
+      val schema = spark.read.parquet(path).schema
+      val tsNanos = name == "events" && schema("ts").dataType == LongType && {
+        val sample = spark.read.schema(schema).parquet(path)
+          .select(col("ts")).filter(col("ts").isNotNull).head(1)
+        // Empty table: either scale maps to the same zero rows —
+        // keep the nanos interpretation (the encoding that has
+        // actually shipped long-typed so far).
+        sample.isEmpty || math.abs(sample(0).getLong(0)) >= 100000000000000000L
+      }
+      Footer(schema, tsNanos)
     }
-    df
+    val raw = spark.read.schema(footer.schema).parquet(path)
+    if (name != "events" || footer.schema("ts").dataType != LongType) raw
+    else if (footer.tsNanos) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else raw.withColumn("ts", timestamp_micros(col("ts")))
   }
 
   /** Spread a small relation across the cluster before a CPU-bound

@@ -270,11 +270,16 @@ object GraftFunctions {
     "bloom_might_contain" -> (es =>
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
 
+  /** Idempotent per session: a builder the registry already holds
+    * (the same function object) is skipped, so repeat calls neither
+    * rewrite the registry nor log "replaced a previously registered
+    * function". */
   def register(s: SparkSession): Unit = {
     val registry = org.apache.spark.sql.classic.ClassicConversions
       .castToImpl(s).sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      registry.createOrReplaceTempFunction(name, b, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).contains(b))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 

@@ -326,8 +326,11 @@ object EventStreams {
     settle(s, windowedCounts(eventsFileSourceTimeOrdered(s, dir, "evordered")),
       OutputMode.Append)
 
-  private val orderedCopies =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Time-ordered scratch copies, each with its schema: the copy is
+    * written once per (session, sf), so its schema is read once, on
+    * the memo miss, not inferred again on every stream build. */
+  private val orderedCopies = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
 
   /** Stamp a scratch copy's part files with strictly increasing
     * mtimes in part-name (= range) order, so FileStreamSource ingests
@@ -368,7 +371,7 @@ object EventStreams {
     // second live session in this JVM can never re-write/re-stamp a
     // directory the first session's FileStreamSource is still listing
     // (see FileRoundTrips.freshScratch for the full race rule).
-    val src = graft.operators.Dedup.dirMemo(orderedCopies,
+    val (src, schema) = graft.operators.Dedup.dirMemo(orderedCopies,
       s"$tag|${System.identityHashCode(s)}|$dir") {
       val out = graft.sources.FileRoundTrips.freshScratch(tag, dir)
       graft.Tables.events(s, dir)
@@ -376,9 +379,8 @@ object EventStreams {
         .repartitionByRange(4, col("ts"))
         .write.mode("overwrite").parquet(out)
       stampIngestOrder(out)
-      out
+      (out, s.read.parquet(out).schema)
     }
-    val schema = s.read.parquet(src).schema
     // 2 files per trigger over 4 range files: ≥2 real micro-batches
     // prove incrementality at half the state-round-trip overhead of
     // one-file batches. Trigger grouping follows the stamped modtime
@@ -476,7 +478,7 @@ object EventStreams {
     * Range-partitioned on ts, mtime-stamped oldest-first; 2 files per
     * trigger over 4 files forces ≥2 real micro-batches. */
   private def docsFileSourceTimeOrdered(s: SparkSession, dir: String): DataFrame = {
-    val src = graft.operators.Dedup.dirMemo(orderedCopies,
+    val (src, schema) = graft.operators.Dedup.dirMemo(orderedCopies,
       s"docordered|${System.identityHashCode(s)}|$dir") {
         val out = graft.sources.FileRoundTrips.freshScratch("docordered", dir)
         graft.Tables.documents(s, dir)
@@ -487,9 +489,10 @@ object EventStreams {
           .repartitionByRange(4, col("ts"))
           .write.mode("overwrite").parquet(out)
         stampIngestOrder(out)
-        out
+        (out, org.apache.spark.sql.types.StructType.fromDDL(
+          "doc_id BIGINT, ts TIMESTAMP, text STRING"))
       }
-    s.readStream.schema("doc_id BIGINT, ts TIMESTAMP, text STRING")
+    s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2").parquet(src)
   }
 

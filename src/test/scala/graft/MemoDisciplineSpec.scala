@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * ROUND-18 EXTENSION: the same defense now covers the artifact-dir
   * memos (ivfIndexDirs, graphDirs, orderedCopies, tierDirs,
   * mergeCache, gramDirs, itemsimDirs, alsDirs, partEventsDirs,
-  * bucketedNames, fragDirs, nanosProbe), which kept the identical
+  * bucketedNames, fragDirs, footers), which kept the identical
   * same-bin-nesting geometry and were safe only by review (verdict
   * r17 finding #1). All route through [[graft.operators.Dedup.dirMemo]];
   * `computeIfAbsent` is banned on EVERY receiver in src/main; the CHM
@@ -81,7 +81,7 @@ class MemoDisciplineSpec extends SparkSpecBase {
     // map it doesn't know exists.
     val pinned = Map(
       "EventStreams.scala" -> 1, // orderedCopies
-      "Tables.scala" -> 1, // nanosProbe
+      "Tables.scala" -> 1, // footers
       "Similarity.scala" -> 1, // ivfIndexDirs
       "Dedup.scala" -> 2, // liveCaches, embPlanesCounts (r20)
       "Curation.scala" -> 1, // tierDirs
@@ -116,7 +116,7 @@ class MemoDisciplineSpec extends SparkSpecBase {
     // no nesting hazard, same registration-put shape as the three
     // pinned liveCaches puts.
     val pinned = Map(("Bpe.scala", "mergeCache", "put") -> 1)
-    val maps = Seq("nanosProbe", "orderedCopies", "ivfIndexDirs", "tierDirs",
+    val maps = Seq("footers", "orderedCopies", "ivfIndexDirs", "tierDirs",
       "mergeCache", "gramDirs", "itemsimDirs", "alsDirs", "graphDirs",
       "partEventsDirs", "bucketedNames", "fragDirs", "embPlanesCounts")
     val ref = (maps.mkString("(", "|", ")") + """\.(\w+)""").r

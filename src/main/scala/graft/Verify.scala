@@ -1,9 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** One partition, rows sorted by every orderable column in schema
+    * order, so two dumps of the same rows hold byte-identical data
+    * pages (`tools/dump_diff.py` compares them; parquet-mr orders each
+    * footer's encoding list per JVM). Only map columns (not orderable)
+    * are left out of the key. */
+  def sortedSingle(df: DataFrame): DataFrame = {
+    val keys = df.schema.fields.toSeq
+      .filter(f => RowOrdering.isOrderable(f.dataType))
+      .map(f => col("`" + f.name.replace("`", "``") + "`"))
+    if (keys.isEmpty) df.coalesce(1) else df.coalesce(1).sortWithinPartitions(keys: _*)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -22,7 +36,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        try sortedSingle(fn(spark, sfDir)).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")

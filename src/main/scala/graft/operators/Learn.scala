@@ -6,6 +6,7 @@ import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.GraftFunctions.decimal_sum
 
 /** Learned-model operators — the classic MapReduce ML workloads
   * (reference analogue: the Mahout-era count-based trainers that ran
@@ -524,7 +525,7 @@ object Learn {
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("cust"), col("l_suppkey").as("item"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("r"))
+        .agg(decimal_sum(col("l_quantity"), 18, 2).cast("double").as("r"))
         .write.mode("overwrite").parquet(out)
       out
     }

@@ -1,11 +1,17 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.QueryContext
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Add, And, AttributeReference, BinaryExpression, Cast, CheckOverflowInSum, EvalMode, Expression, ExpressionInfo, If, IsNull, Literal, NumericEvalContext, SupportQueryContext, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, Decimal, DecimalType, DoubleType, LongType, StringType, StructField, StructType}
 
 /** Custom Catalyst expressions for the vector/similarity operators the
   * builtin function library can't express efficiently. Both implement
@@ -205,6 +211,210 @@ case class BpeSegment(child: Expression, merges: Seq[String])
     copy(child = newChild)
 }
 
+/** Per-row half of [[DecimalSum]]: the unscaled long of
+  * `CAST(child AS DECIMAL(precision, scale))` for a DOUBLE `child`,
+  * precision ≤ 18. `cast` is that very Spark `Cast`, evaluated only when
+  * the fast path declines, so every answer is either provably equal to
+  * Spark's or Spark's own (null or error included).
+  *
+  * Why the fast path is exact. Spark casts a double through its
+  * `Double.toString` form D and rounds D HALF_UP to `scale` digits.
+  * D parses back to x, so |D − x| ≤ ulp(x)/2. The kernel computes
+  * y = fl(|x|·10^s) (10^s is an exact double), which is within
+  * ulp(y)/2 of |x|·10^s; and ulp(x)·10^s < 2·ulp(y) because y is at
+  * least 2^e·10^s for x's binade exponent e. So |D·10^s| and y differ by
+  * less than 1.5·ulp(y). If frac(y) is more than 2·ulp(y) away from
+  * 0.5, no rounding midpoint k + 0.5 lies between them, and rounding y
+  * to the nearest integer gives the same integer as rounding D·10^s
+  * HALF_UP; the sign is applied after (HALF_UP is symmetric). The fast
+  * path further needs y < 2^52 (so frac(y) is exact and the ulp margin
+  * means something) and a result below 10^precision. Everything else —
+  * values near a midpoint, NaN, ±Inf, overflow — goes to `cast`. */
+case class UnscaledDecimal(child: Expression, cast: Expression, precision: Int, scale: Int)
+    extends BinaryExpression {
+
+  override def left: Expression = child
+  override def right: Expression = cast
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def prettyName: String = "unscaled_decimal"
+
+  override def eval(input: InternalRow): Any = {
+    val x = child.eval(input)
+    if (x == null) null
+    else {
+      val u = VectorOps.unscaledDecimal(x.asInstanceOf[Double], precision, scale)
+      if (u != VectorOps.NoFastPath) u
+      else {
+        val d = cast.eval(input)
+        if (d == null) null else d.asInstanceOf[Decimal].toUnscaledLong
+      }
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val x = child.genCode(ctx)
+    val c = cast.genCode(ctx)
+    ev.copy(code = code"""
+      ${x.code}
+      boolean ${ev.isNull} = ${x.isNull};
+      long ${ev.value} = 0L;
+      if (!${ev.isNull}) {
+        ${ev.value} = graft.plans.VectorOps.unscaledDecimal(${x.value}, $precision, $scale);
+        if (${ev.value} == ${VectorOps.NoFastPath}L) {
+          ${c.code}
+          ${ev.isNull} = ${c.isNull};
+          ${ev.value} = ${c.isNull} ? 0L : ${c.value}.toUnscaledLong();
+        }
+      }""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): UnscaledDecimal =
+    copy(child = newLeft, cast = newRight)
+}
+
+/** One step of [[DecimalSum]]'s buffer: (hi, lo) plus `x` with the
+  * carry normalized so |lo| < 10^18 ([[VectorOps.hiLoHi]]); `high`
+  * selects which half this expression returns. A null `x` (a null
+  * input row, or one the cast turned into null) leaves the buffer as
+  * it is. */
+case class HiLoAdd(hi: Expression, lo: Expression, x: Expression, high: Boolean)
+    extends TernaryExpression {
+
+  override def first: Expression = hi
+  override def second: Expression = lo
+  override def third: Expression = x
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val h = hi.eval(input).asInstanceOf[Long]
+    val l = lo.eval(input).asInstanceOf[Long]
+    val v = x.eval(input)
+    if (v == null) { if (high) h else l }
+    else if (high) VectorOps.hiLoHi(h, l, v.asInstanceOf[Long])
+    else VectorOps.hiLoLo(l, v.asInstanceOf[Long])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val h = hi.genCode(ctx)
+    val l = lo.genCode(ctx)
+    val v = x.genCode(ctx)
+    val step =
+      if (high) s"graft.plans.VectorOps.hiLoHi(${h.value}, ${l.value}, ${v.value})"
+      else s"graft.plans.VectorOps.hiLoLo(${l.value}, ${v.value})"
+    ev.copy(code = code"""
+      ${h.code}
+      ${l.code}
+      ${v.code}
+      long ${ev.value} = ${v.isNull} ? ${if (high) h.value else l.value} : $step;""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): HiLoAdd =
+    copy(hi = newFirst, lo = newSecond, x = newThird)
+}
+
+/** [[DecimalSum]]'s result: hi·10^18 + lo as a decimal of `dataType`,
+  * or null when it has more digits than `dataType` holds. */
+case class HiLoDecimal(hi: Expression, lo: Expression, dataType: DecimalType)
+    extends BinaryExpression {
+
+  override def left: Expression = hi
+  override def right: Expression = lo
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(h: Any, l: Any): Any =
+    VectorOps.hiLoDecimal(h.asInstanceOf[Long], l.asInstanceOf[Long],
+      dataType.precision, dataType.scale)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val h = hi.genCode(ctx)
+    val l = lo.genCode(ctx)
+    ev.copy(code = code"""
+      ${h.code}
+      ${l.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = graft.plans.VectorOps.hiLoDecimal(
+        ${h.value}, ${l.value}, ${dataType.precision}, ${dataType.scale});
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): HiLoDecimal =
+    copy(hi = newLeft, lo = newRight)
+}
+
+/** `decimal_sum(x, p, s)`: exactly `sum(CAST(x AS DECIMAL(p, s)))` for a
+  * DOUBLE `x` and p ≤ 18 — the same DECIMAL(p+10, s) type and value,
+  * null for empty or all-null input, the same null-or-error for a row
+  * the cast rejects (NaN, ±Inf, out of range) — computed on unscaled
+  * longs inside whole-stage codegen instead of a `BigDecimal` per row.
+  *
+  * Per row, [[UnscaledDecimal]] gives the cast's unscaled long (Spark's
+  * `Cast` is its fallback). The buffer holds the running sum as
+  * hi·10^18 + lo with |lo| < 10^18, carrying into hi, so it can't
+  * overflow before DECIMAL(p+10, s) would (that takes over 10^10 rows
+  * per group). `evaluate` builds the Decimal once per group and hands
+  * it to Spark's `CheckOverflowInSum`; a sum past p+10 digits reaches it
+  * as null, as Spark's overflowed buffer does in a grouped aggregation,
+  * so non-ANSI gives null and ANSI throws Spark's sum-overflow error.
+  * `ansi` is the session's `spark.sql.ansi.enabled` when the call is
+  * built, as Spark's `Sum` captures its eval mode. */
+case class DecimalSum(child: Expression, precision: Int, scale: Int, ansi: Boolean)
+    extends DeclarativeAggregate with UnaryLike[Expression] with SupportQueryContext {
+
+  require(precision >= 1 && precision <= 18 && scale >= 0 && scale <= precision,
+    s"decimal_sum: needs 1 <= precision <= 18 and 0 <= scale <= precision, " +
+      s"got ($precision, $scale)")
+
+  override def dataType: DecimalType = DecimalType(precision + 10, scale)
+  override def nullable: Boolean = true
+  override def prettyName: String = "decimal_sum"
+  override def defaultResult: Option[Literal] = Some(Literal.create(null, dataType))
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"decimal_sum needs a DOUBLE input, got ${child.dataType.sql}")
+
+  override def initQueryContext(): Option[QueryContext] =
+    if (ansi) Some(origin.context) else None
+
+  private lazy val hi = AttributeReference("hi", LongType, nullable = false)()
+  private lazy val lo = AttributeReference("lo", LongType, nullable = false)()
+  private lazy val isEmpty = AttributeReference("isEmpty", BooleanType, nullable = false)()
+
+  override lazy val aggBufferAttributes: Seq[AttributeReference] = Seq(hi, lo, isEmpty)
+  override lazy val initialValues: Seq[Expression] =
+    Seq(Literal(0L), Literal(0L), Literal(true))
+
+  private lazy val unscaled = UnscaledDecimal(child,
+    Cast(child, DecimalType(precision, scale), None, EvalMode.fromBoolean(ansi)),
+    precision, scale)
+
+  // `unscaled` is a direct, always-evaluated child of all three update
+  // expressions, so subexpression elimination computes it once per row.
+  override lazy val updateExpressions: Seq[Expression] = Seq(
+    HiLoAdd(hi, lo, unscaled, high = true),
+    HiLoAdd(hi, lo, unscaled, high = false),
+    And(IsNull(unscaled), isEmpty))
+
+  override lazy val mergeExpressions: Seq[Expression] = Seq(
+    HiLoAdd(Add(hi.left, hi.right, NumericEvalContext(EvalMode.LEGACY)),
+      lo.left, lo.right, high = true),
+    HiLoAdd(hi.left, lo.left, lo.right, high = false),
+    And(isEmpty.left, isEmpty.right))
+
+  override lazy val evaluateExpression: Expression =
+    If(isEmpty, Literal.create(null, dataType),
+      CheckOverflowInSum(HiLoDecimal(hi, lo, dataType), dataType, !ansi, getContextOrNull()))
+
+  override protected def withNewChildInternal(newChild: Expression): DecimalSum =
+    copy(child = newChild)
+}
+
 /** Registration + Column-API entry points.
   *
   * [[GraftFunctions.register]] adds the expressions to the session's
@@ -213,12 +423,13 @@ case class BpeSegment(child: Expression, merges: Seq[String])
   */
 object GraftFunctions {
 
-  /** bands/planes shape the kernel, so they must be integer LITERALS
+  /** bands/planes (and decimal_sum's precision/scale) shape the
+    * kernel, so they must be integer LITERALS
     * at plan time. Raw `eval().asInstanceOf[Int]` broke on BIGINT
     * literals (`1::BIGINT` → ClassCastException) and threw an
     * inscrutable NPE for non-foldable inputs — match any integral
     * literal, reject everything else with a real message. */
-  private[plans] def intLitArg(e: Expression, what: String): Int = e match {
+  private[plans] def intLitArg(e: Expression, fn: String, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Number,
         org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
         org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType) =>
@@ -226,10 +437,10 @@ object GraftFunctions {
       // a nonsense kernel shape (e.g. bands=0 → empty output) — same
       // real-message rule as the non-literal case.
       if (v.longValue() != v.intValue()) throw new IllegalArgumentException(
-        s"srp_band_sigs: $what literal ${v.longValue()} is outside Int range")
+        s"$fn: $what literal ${v.longValue()} is outside Int range")
       else v.intValue()
     case other => throw new IllegalArgumentException(
-      s"srp_band_sigs: $what must be an integer literal, got ${other.sql}")
+      s"$fn: $what must be an integer literal, got ${other.sql}")
   }
 
   /** The merge table shapes the [[BpeSegment]] kernel, so it must be a
@@ -249,26 +460,37 @@ object GraftFunctions {
       s"bpe_segment: merges must be a string-array literal, got ${other.sql}")
   }
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
-    "cosine_sim_d" -> (es => CosineSimilarityD(es(0), es(1))),
-    "dot_d" -> (es => DotProductD(es(0), es(1))),
-    "simhash60" -> (es => SimHash60(es.head)),
-    "srp_band_sigs" -> (es => SrpBandSigs(es.head,
-      intLitArg(es(1), "bands"), intLitArg(es(2), "planes"))),
-    "lsh_band_sigs" -> (es => LshBandSigs(es.head)),
-    "bpe_segment" -> (es => BpeSegment(es.head, strArrayLitArg(es(1)))),
-    "repetition_stats" -> (es => RepetitionStats(es.head)),
-    "fp_minmax" -> (es => FpMinMax(es.head)),
+  /** Every SQL-visible kernel: name, expression class (for the
+    * registry's ExpressionInfo) and builder. [[register]] and
+    * [[GraftSessionExtensions]] both read this one list. */
+  private[graft] val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSimilarity], es => CosineSimilarity(es(0), es(1))),
+    ("cosine_sim_d", classOf[CosineSimilarityD], es => CosineSimilarityD(es(0), es(1))),
+    ("dot_d", classOf[DotProductD], es => DotProductD(es(0), es(1))),
+    ("simhash60", classOf[SimHash60], es => SimHash60(es.head)),
+    ("srp_band_sigs", classOf[SrpBandSigs], es => SrpBandSigs(es.head,
+      intLitArg(es(1), "srp_band_sigs", "bands"), intLitArg(es(2), "srp_band_sigs", "planes"))),
+    ("lsh_band_sigs", classOf[LshBandSigs], es => LshBandSigs(es.head)),
+    ("bpe_segment", classOf[BpeSegment], es => BpeSegment(es.head, strArrayLitArg(es(1)))),
+    ("repetition_stats", classOf[RepetitionStats], es => RepetitionStats(es.head)),
+    ("fp_minmax", classOf[FpMinMax], es => FpMinMax(es.head)),
+    ("decimal_sum", classOf[DecimalSum], es => decimalSum(es(0),
+      intLitArg(es(1), "decimal_sum", "precision"), intLitArg(es(2), "decimal_sum", "scale"))),
     // Spark's own runtime-filter bloom expressions (used internally
     // by InjectRuntimeFilter but not registered as SQL functions) —
     // surfaced for the explicit semi-join prune tier
     // (Curation.decontaminateBloom). Input must be xxhash64(col).
-    "bloom_filter_agg" -> (es =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es(0), es(1), es(2))),
-    "bloom_might_contain" -> (es =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
+    ("bloom_filter_agg",
+      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate], es =>
+        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+          es(0), es(1), es(2))),
+    ("bloom_might_contain",
+      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain], es =>
+        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
+
+  /** A [[DecimalSum]] under the session's current ANSI mode. */
+  private def decimalSum(x: Expression, precision: Int, scale: Int): DecimalSum =
+    DecimalSum(x, precision, scale, SQLConf.get.ansiEnabled)
 
   /** Idempotent per session: a builder the registry already holds
     * (the same function object) is skipped, so repeat calls neither
@@ -277,7 +499,7 @@ object GraftFunctions {
   def register(s: SparkSession): Unit = {
     val registry = org.apache.spark.sql.classic.ClassicConversions
       .castToImpl(s).sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
+    builders.foreach { case (name, _, b) =>
       if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).contains(b))
         registry.createOrReplaceTempFunction(name, b, "built-in")
     }
@@ -308,6 +530,17 @@ object GraftFunctions {
 
   def fp_minmax(text: Column): Column = call_function("fp_minmax", text)
 
+  /** Exactly `sum(x.cast(DECIMAL(precision, scale)))` — same type,
+    * value, nulls and errors — for a DOUBLE `x` and precision ≤ 18, on
+    * unscaled longs ([[DecimalSum]]). The way to write an exact p ≤ 18
+    * sum. Registers the kernels on the active session first (a no-op
+    * once done), so call sites need no [[register]] call of their own. */
+  def decimal_sum(x: Column, precision: Int, scale: Int): Column = {
+    register(SparkSession.active)
+    call_function("decimal_sum", x,
+      org.apache.spark.sql.functions.lit(precision), org.apache.spark.sql.functions.lit(scale))
+  }
+
   /** Bloom filter over xxhash64 of `c` (binary, broadcastable). */
   def bloom_filter_agg(c: Column, estItems: Long, numBits: Long): Column =
     call_function("bloom_filter_agg", org.apache.spark.sql.functions.xxhash64(c),
@@ -322,55 +555,8 @@ object GraftFunctions {
 /** `spark.sql.extensions=graft.plans.GraftSessionExtensions` registers
   * the functions at session build time on every node of a cluster. */
 class GraftSessionExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim_d"),
-      new ExpressionInfo(classOf[CosineSimilarityD].getName, "cosine_sim_d"),
-      (es: Seq[Expression]) => CosineSimilarityD(es(0), es(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_d"),
-      new ExpressionInfo(classOf[DotProductD].getName, "dot_d"),
-      (es: Seq[Expression]) => DotProductD(es(0), es(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),
-      (es: Seq[Expression]) => SimHash60(es.head)))
-    ext.injectFunction((
-      FunctionIdentifier("srp_band_sigs"),
-      new ExpressionInfo(classOf[SrpBandSigs].getName, "srp_band_sigs"),
-      (es: Seq[Expression]) => SrpBandSigs(es.head,
-        GraftFunctions.intLitArg(es(1), "bands"),
-        GraftFunctions.intLitArg(es(2), "planes"))))
-    ext.injectFunction((
-      FunctionIdentifier("lsh_band_sigs"),
-      new ExpressionInfo(classOf[LshBandSigs].getName, "lsh_band_sigs"),
-      (es: Seq[Expression]) => LshBandSigs(es.head)))
-    ext.injectFunction((
-      FunctionIdentifier("repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStats].getName, "repetition_stats"),
-      (es: Seq[Expression]) => RepetitionStats(es.head)))
-    ext.injectFunction((
-      FunctionIdentifier("fp_minmax"),
-      new ExpressionInfo(classOf[FpMinMax].getName, "fp_minmax"),
-      (es: Seq[Expression]) => FpMinMax(es.head)))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (es: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          es(0), es(1), es(2))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_might_contain"),
-      (es: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.builders.foreach { case (name, cls, b) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), b))
+    }
 }

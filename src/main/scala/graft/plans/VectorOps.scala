@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.Decimal
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static numeric kernels called from both interpreted (`nullSafeEval`)
@@ -381,5 +382,60 @@ object VectorOps {
     var t = 0
     while (t < syms.size()) { arr(t) = UTF8String.fromString(syms.get(t)); t += 1 }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
+  }
+
+  /** 10^i for the [[unscaledDecimal]] fast path: exact doubles up to
+    * 10^22, exact longs up to 10^18. */
+  private val pow10D: Array[Double] = Array.iterate(1.0, 19)(_ * 10.0)
+  private val pow10L: Array[Long] = Array.iterate(1L, 19)(_ * 10L)
+  private val TwoPow52 = 4503599627370496.0
+
+  /** [[unscaledDecimal]]'s "no fast answer" marker. No DECIMAL(p≤18, s)
+    * value has it as its unscaled long (those are below 10^18). */
+  final val NoFastPath: Long = Long.MinValue
+
+  /** The unscaled long of `CAST(x AS DECIMAL(precision, scale))`
+    * (precision ≤ 18), or [[NoFastPath]] when the answer must come from
+    * Spark's own cast. See [[UnscaledDecimal]] for why the fast answer is
+    * exact. */
+  def unscaledDecimal(x: Double, precision: Int, scale: Int): Long = {
+    val y = Math.abs(x) * pow10D(scale)
+    if (!(y < TwoPow52)) NoFastPath // also NaN and ±Inf
+    else {
+      val f = Math.floor(y)
+      val frac = y - f // exact: y and floor(y) share y's ulp grid
+      if (Math.abs(frac - 0.5) <= 2 * Math.ulp(y)) NoFastPath
+      else {
+        val r = if (frac > 0.5) f.toLong + 1 else f.toLong
+        if (r >= pow10L(precision)) NoFastPath
+        else if (x < 0) -r else r
+      }
+    }
+  }
+
+  /** Base of the [[DecimalSum]] buffer: the sum is hi·10^18 + lo with
+    * |lo| < 10^18, so lo plus one DECIMAL(p≤18) value never overflows. */
+  final val HiLoBase: Long = 1000000000000000000L
+  private val hiLoBaseBig = java.math.BigInteger.valueOf(HiLoBase)
+
+  /** The hi half of (hi, lo) + x: hi plus the carry out of lo + x. */
+  def hiLoHi(hi: Long, lo: Long, x: Long): Long = {
+    val t = lo + x
+    if (t >= HiLoBase) hi + 1 else if (t <= -HiLoBase) hi - 1 else hi
+  }
+
+  /** The lo half of (hi, lo) + x: lo + x less its carry, so |lo| < 10^18. */
+  def hiLoLo(lo: Long, x: Long): Long = {
+    val t = lo + x
+    if (t >= HiLoBase) t - HiLoBase else if (t <= -HiLoBase) t + HiLoBase else t
+  }
+
+  /** hi·10^18 + lo as a Decimal of `scale`, or null when the value
+    * needs more than `precision` digits. */
+  def hiLoDecimal(hi: Long, lo: Long, precision: Int, scale: Int): Decimal = {
+    val v = java.math.BigInteger.valueOf(hi).multiply(hiLoBaseBig)
+      .add(java.math.BigInteger.valueOf(lo))
+    if (v.abs.compareTo(java.math.BigInteger.TEN.pow(precision)) >= 0) null
+    else Decimal(new java.math.BigDecimal(v, scale), precision, scale)
   }
 }

@@ -161,4 +161,65 @@ class DeterminismSpec extends SparkSpecBase {
         .cast("decimal(25,12)").as("repeated")).head()
     assert(row.getDecimal(0).compareTo(row.getDecimal(1)) == 0)
   }
+
+  /** `sum(...)` calls whose argument is one term holding a
+    * `.cast("decimal(p,s)")` with p ≤ 18: Spark's BigDecimal-per-row
+    * sum of a narrow decimal, which `decimal_sum` computes exactly on
+    * longs. A top-level arithmetic operator in the argument (a
+    * right-sized decimal product, like nb_classify's (14,12)×(10,0))
+    * makes it a wide-decimal sum, which is left alone. */
+  private def narrowDecimalSums(src: String): Seq[String] = {
+    def close(open: Int): Int = {
+      var depth = 0; var i = open; var inStr = false
+      while (i < src.length) {
+        val c = src.charAt(i)
+        if (inStr) { if (c == '\\') i += 1 else if (c == '"') inStr = false }
+        else if (c == '"') inStr = true
+        else if (c == '(') depth += 1
+        else if (c == ')') { depth -= 1; if (depth == 0) return i }
+        i += 1
+      }
+      src.length - 1
+    }
+    // Depth-0 text of the argument with string literals blanked out.
+    def topLevel(arg: String): String = {
+      val b = new StringBuilder; var depth = 0; var inStr = false
+      arg.foreach { c =>
+        if (inStr) { if (c == '"') inStr = false }
+        else if (c == '"') inStr = true
+        else if (c == '(') depth += 1
+        else if (c == ')') depth -= 1
+        else if (depth == 0) b += c
+      }
+      b.toString
+    }
+    val narrowCast = """\.cast\("decimal\((\d+),\s*\d+\)"\)""".r
+    """(?<![\w.])sum\(""".r.findAllMatchIn(src).toSeq.flatMap { m =>
+      val arg = src.substring(m.end, close(m.end - 1))
+      val narrow = narrowCast.findAllMatchIn(arg).exists(_.group(1).toInt <= 18)
+      if (narrow && !topLevel(arg).exists("*+-/%".contains(_))) Some(s"sum($arg)") else None
+    }
+  }
+
+  test("pin: exact DECIMAL(p<=18) sums in src/main go through decimal_sum") {
+    import scala.jdk.CollectionConverters._
+    // Witnesses: the detector flags both narrow shapes and spares the
+    // right-sized wide product.
+    assert(narrowDecimalSums(
+      """sum((col("a") * col("b")).cast("decimal(18,4)")).cast("double")""").size == 1)
+    assert(narrowDecimalSums("""sum(when(col("f"), col("a").cast("decimal(18,4)"))
+      .otherwise(lit(0).cast("decimal(18,4)")))""").size == 1)
+    assert(narrowDecimalSums("""sum(col("ll").cast("decimal(14,12)") *
+      col("cnt").cast("decimal(10,0)"))""").isEmpty)
+    assert(narrowDecimalSums("""sum(col("v").cast("decimal(28,10)"))""").isEmpty)
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).toSeq
+    val hits = files.flatMap { case (f, src) => narrowDecimalSums(src).map(h => s"$f: $h") }
+    if (hits.nonEmpty)
+      fail("write these as GraftFunctions.decimal_sum(x, p, s):\n" + hits.mkString("\n"))
+    val uses = files.map(_._2.split("decimal_sum\\(", -1).length - 1).sum
+    assert(uses >= 20, s"only $uses decimal_sum( calls in src/main: is the pin still reading it?")
+  }
 }

@@ -95,6 +95,18 @@ class StreamingSpec extends SparkSpecBase {
       key(EventStreams.windowedCountsFileStream(spark, sfDir)))
   }
 
+  test("MemoryStream replay and the file source settle to the same sliding-window state") {
+    // The sliding plan's two ingest harnesses: one-batch MemoryStream
+    // replay and the multi-micro-batch file source (the registered
+    // streaming_sliding entry) must agree row for row, as above.
+    import org.apache.spark.sql.functions.col
+    val key = (df: org.apache.spark.sql.DataFrame) =>
+      df.orderBy(df.columns.map(col).toIndexedSeq: _*).collect().toSeq
+    val replay = key(EventStreams.slidingCountsReplay(spark, sfDir))
+    assert(replay.nonEmpty)
+    assert(replay == key(EventStreams.slidingCountsFileStream(spark, sfDir)))
+  }
+
   test("append-mode file stream: watermark evicts closed windows exactly once and bounds state") {
     // The 100 TB deployment output mode: Append emits a window ONCE,
     // when the watermark passes its end, and drops its state — unlike

@@ -7,8 +7,12 @@ Reads each <outDir>/<name>/ parquet (Spark output) and runs the
 corresponding oracle SQL from <outDir>/oracle_sql.json in DuckDB with
 the sf tables registered as views. Sorts columns by name, then rows,
 and compares cell-by-cell (exact, after canonicalizing NaN/None).
+
+Each PASS/FAIL line carries that oracle's wall time (Spark output read,
+DuckDB run and compare); the run ends with the process's peak RSS and
+the 10 slowest oracles, so the gate's cost is on record.
 """
-import sys, json, glob, math
+import sys, json, glob, math, resource, time
 import duckdb
 import pandas as pd
 
@@ -67,7 +71,9 @@ def main(sf_dir: str, out_dir: str) -> int:
                 print(f"FAIL {name}: non-scalar output columns {bad}")
                 n_fail += 1
             break
+    wall = {}
     for name in sorted(oracle):
+        t0 = time.monotonic()
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output")
@@ -77,20 +83,23 @@ def main(sf_dir: str, out_dir: str) -> int:
         try:
             duck_df = con.execute(oracle[name]).fetchdf()
         except Exception as e:
-            print(f"FAIL {name}: oracle error {e}")
+            wall[name] = time.monotonic() - t0
+            print(f"FAIL {name}: oracle error {e} [{wall[name]:.2f}s]")
             n_fail += 1
             continue
         s, d = canon(spark_df), canon(duck_df)
+        wall[name] = time.monotonic() - t0
+        took = f"[{wall[name]:.2f}s]"
         if len(s) != len(d):
-            print(f"FAIL {name}: rows spark={len(s)} duck={len(d)}")
+            print(f"FAIL {name}: rows spark={len(s)} duck={len(d)} {took}")
             n_fail += 1
         elif s != d:
             bad = next(i for i, (a, b) in enumerate(zip(s, d)) if a != b)
-            print(f"FAIL {name}: first diff row {bad}:\n  spark={s[bad]}\n  duck ={d[bad]}")
+            print(f"FAIL {name}: first diff row {bad} {took}:\n  spark={s[bad]}\n  duck ={d[bad]}")
             print(f"  spark cols={sorted(spark_df.columns)} duck cols={sorted(duck_df.columns)}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(s)} rows)")
+            print(f"PASS {name} ({len(s)} rows) {took}")
             n_pass += 1
     # rows-only queries (no oracle)
     for d in sorted(glob.glob(f"{out_dir}/*/")):
@@ -99,6 +108,13 @@ def main(sf_dir: str, out_dir: str) -> int:
             files = glob.glob(f"{d}/*.parquet")
             n = sum(len(pd.read_parquet(f)) for f in files) if files else 0
             print(f"ROWS {name}: {n} rows")
+    # ru_maxrss is in KiB on Linux: the peak of this process, DuckDB included.
+    peak_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+    print(f"\noracle wall {sum(wall.values()):.1f}s over {len(wall)} oracles, "
+          f"peak RSS {peak_mb:.0f} MB")
+    print("slowest oracles:")
+    for name, t in sorted(wall.items(), key=lambda kv: -kv[1])[:10]:
+        print(f"  {t:8.2f}s  {name}")
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 

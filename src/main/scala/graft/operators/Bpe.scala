@@ -94,7 +94,6 @@ object Bpe {
   /** #50b driver surface: the learned merge table as data —
     * deterministic, so `rank` is reproducible run-to-run. */
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val m = trainOn(vocab(s, dir), NumMerges)
     mergeCache.put(Dedup.cacheKey(s, "bpemerges", dir), m)
     import s.implicits._
@@ -104,7 +103,6 @@ object Bpe {
 
   private def trainedMerges(s: SparkSession, dir: String): Seq[(String, String, Long)] =
     Dedup.dirMemo(mergeCache, Dedup.cacheKey(s, "bpemerges", dir)) {
-      GraftFunctions.register(s)
       trainOn(vocab(s, dir), NumMerges)
     }
 
@@ -114,7 +112,6 @@ object Bpe {
     * codegen pass per doc; the merge table rides the plan as a
     * constant (no join, no shuffle). */
   def tokensBpe(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val flat = trainedMerges(s, dir).flatMap(m => Seq(m._1, m._2))
     Tables.spread(s, Tables.documents(s, dir), "doc_id")
       .select(col("doc_id"), tokens(col("text")).as("toks"))

@@ -519,7 +519,6 @@ object Curation {
     * equivalence is spec-asserted and both share one DuckDB oracle).
     */
   def decontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     import graft.plans.GraftFunctions.{bloom_filter_agg, bloom_might_contain}
     val grams = gramRelation(s, dir)
     // Persisted: the bench gram build (tokenize + n-gram md5 over the
@@ -608,7 +607,6 @@ object Curation {
     * irrational-average rule), and the executed draw compares u
     * against the bit-equal rounded rf exactly as mix_execute does. */
   def mixByCluster(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val eD = Similarity.embD(s, dir)
     val cents = Similarity.lloydCentroids(eD)
     val assigned = eD.select(col("vec_id").as("doc_id"),

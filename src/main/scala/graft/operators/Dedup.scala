@@ -291,7 +291,6 @@ object Dedup {
     * free). */
   private[operators] def lshBands(s: SparkSession, dir: String): DataFrame =
     memo(s, "lsh", dir)({
-      GraftFunctions.register(s)
       Tables.spread(s, Tables.documents(s, dir), "doc_id")
         .select(col("doc_id"),
           posexplode(GraftFunctions.lsh_band_sigs(col("text"))).as(Seq("band", "sig")))
@@ -555,7 +554,6 @@ object Dedup {
     * guarantees recall for hamming ≤ 3 with one equality-join shuffle
     * (no pairwise scan). */
   def simhash(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     // Persisted like lshBands: the self-join consumes the chunk
     // relation twice, and correctness-by-reuse must not depend on
     // ReusedExchange surviving AQE's broadcast conversion — uncached,
@@ -715,7 +713,6 @@ object Dedup {
     * planted near-identical vectors is spec-asserted ≥0.9
     * (DedupSimilaritySpec). */
   def embeddingLsh(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val planes = embPlanes(s, dir)
     // Persisted like lshBands: the self-join consumes the banded
@@ -755,7 +752,6 @@ object Dedup {
     * runs on O(candidates), never O(n²); embeddings join back once
     * per side exactly like [[jaccard]]'s trigram sets. */
   def semantic(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val pairs = minhashLsh(s, dir)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     pairs
@@ -794,7 +790,6 @@ object Dedup {
     * cos ≥ 0.9 near-identicals, which co-cluster almost surely; at
     * lower τ, raise k more slowly or multi-probe the assignment). */
   def semDedup(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val eD = Similarity.embD(s, dir)
     // k is corpus-derived (round 20, [[semK]]): 16 at every declared
     // SF — identical plan and output — growing ∝ √n past n = 2722 so
@@ -843,7 +838,6 @@ object Dedup {
     * scale path is [[embeddingLsh]]). Uses the codegen'd
     * CosineSimilarity Catalyst expression. */
   def embedding(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val a = Tables.spread(s, e, "vec_id")
       .select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))

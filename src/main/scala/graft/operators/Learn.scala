@@ -397,7 +397,6 @@ object Learn {
     * fixed-order cosine doubles (bit-identical cross-engine, the
     * ann-family precedent), votes are exact integers. */
   def knnClassify(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val queries = e.filter(col("vec_id") < KnnQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))

@@ -232,7 +232,6 @@ object Relational {
     * kills ~(1−selectivity) of them in the map stage for a
     * constant-size blob. */
   def joinBloom(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     import graft.plans.GraftFunctions.{bloom_filter_agg, bloom_might_contain}
     val dim = Tables.orders(s, dir)
       .filter(col("o_orderpriority") === "1-URGENT")

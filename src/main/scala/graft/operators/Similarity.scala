@@ -29,7 +29,6 @@ object Similarity {
     * small → broadcast; candidates stream; window-ranked per query
     * with a total tie-break. */
   def annBruteForce(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val queries = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -197,7 +196,6 @@ object Similarity {
     * centroids; larger k switches to the broadcast-relation arg-max
     * ([[assignBroadcast]]). */
   def annIvf(s: SparkSession, dir: String, k: Int, nprobe: Int): DataFrame = {
-    GraftFunctions.register(s)
     val eD = embD(s, dir)
     val cents = lloydCentroids(eD, k)
     val assigned =
@@ -266,7 +264,6 @@ object Similarity {
     * layout is the handoff a separate serving job would read. */
   private[graft] def ivfIndexDir(s: SparkSession, dir: String, k: Int): String =
     Dedup.dirMemo(ivfIndexDirs, Dedup.cacheKey(s, s"ivfidx$k", dir)) {
-      GraftFunctions.register(s)
       // freshScratch: every memo miss builds into a FRESH directory,
       // so a second session in this JVM can't overwrite an index the
       // first is still serving from.
@@ -306,7 +303,6 @@ object Similarity {
     * assignments for the same ids, and constructing the plan
     * launches no Lloyd job once the index exists. */
   def annIvfIngest(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val idx = ivfIndexDir(s, dir, BigK)
     val cents = broadcast(s.read.schema("c_id BIGINT, c_emb ARRAY<DOUBLE>")
       .parquet(s"$idx/centroids"))
@@ -337,7 +333,6 @@ object Similarity {
     * runs: the index build is a nightly job, query batches touch only
     * (k·dim centroids + the probed slice of assignments). */
   def annIvfServe(s: SparkSession, dir: String, k: Int, nprobe: Int): DataFrame = {
-    GraftFunctions.register(s)
     val idx = ivfIndexDir(s, dir, k)
     val cents = broadcast(s.read.schema("c_id BIGINT, c_emb ARRAY<DOUBLE>")
       .parquet(s"$idx/centroids"))
@@ -372,7 +367,6 @@ object Similarity {
     * the earlier per-plane `dot_d(cast(embedding), <plane literal>)`
     * fan-out walked the vector 8× and re-cast it per plane. */
   def annLsh(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     // Bucket size via a window over the bucket key: one shuffle, one
     // scan (the former groupBy+join-back computed the scan and the 8
@@ -453,7 +447,6 @@ object Similarity {
     * distance table both read it, and without the persist each
     * consumer replans the whole Lloyd chain. ≤ [[PqM]]·[[PqK]] rows. */
   private[graft] def pqCodebooks(s: SparkSession, dir: String, rounds: Int): DataFrame = {
-    GraftFunctions.register(s)
     val melted = pqMelted(s, dir)
     Dedup.memo(s, s"pqcents$rounds", dir)({
       var cents = melted.filter(col("vec_id") < PqK)
@@ -581,7 +574,6 @@ object Similarity {
     * codebooks) from the same parquet and matches the final ranking
     * bit-for-bit. */
   def annIvfPq(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     import s.implicits._
     val eD = embD(s, dir)
     val coarse = lloydCentroids(eD, NumCentroids)
@@ -666,7 +658,6 @@ object Similarity {
     * the handoff a separate serving job would read. */
   private[graft] def pqIndexDir(s: SparkSession, dir: String): String =
     Dedup.dirMemo(ivfIndexDirs, Dedup.cacheKey(s, "pqidx", dir)) {
-      GraftFunctions.register(s)
       val idx = graft.sources.FileRoundTrips.freshScratch("pqindex", dir)
       pqCodebooks(s, dir, NumLloyd).coalesce(1)
         .write.mode("overwrite").parquet(s"$idx/codebooks")
@@ -741,7 +732,6 @@ object Similarity {
     * training is a nightly job, query batches touch 4-byte codes +
     * the shortlist's vectors. */
   def annPqServe(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val idx = pqIndexDir(s, dir)
     val cents = s.read.schema(PqCodebooksSchema).parquet(s"$idx/codebooks")
     val codes = s.read.schema(PqCodesSchema).parquet(s"$idx/codes")
@@ -770,7 +760,6 @@ object Similarity {
     * training passes — the nightly-build/serve split a 100 TB ANN
     * deployment runs — and bit-identical to [[annIvfPq]]. */
   def annIvfPqServe(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val pqIdx = pqIndexDir(s, dir)
     val ivfIdx = ivfIndexDir(s, dir, NumCentroids)
     val coarse = broadcast(s.read.schema("c_id BIGINT, c_emb ARRAY<DOUBLE>")
@@ -877,7 +866,6 @@ object Similarity {
     * DuckDB mirror re-trains the quantizer, re-codes, dequantizes
     * and matches the final ranking bit-for-bit. */
   def annSq8(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val queries = embD(s, dir).filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("emb_d").as("q_emb"))
     val cands = sq8Coded(s, dir)

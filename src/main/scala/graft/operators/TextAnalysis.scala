@@ -97,7 +97,6 @@ object TextAnalysis {
     * expression behind a Generate boundary so CollapseProject can't
     * re-inline it once per consuming column. */
   def repetition(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     Tables.spread(s, Tables.documents(s, dir), "doc_id")
       .select(col("doc_id"),
         explode(array(graft.plans.GraftFunctions.repetition_stats(lower(col("text"))))).as("rs"))
@@ -325,7 +324,6 @@ object TextAnalysis {
     * arrays are separate expressions after CollapseProject), and
     * compares raw digests instead of hex strings. */
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     Tables.spread(s, Tables.documents(s, dir), "doc_id")
       .select(col("doc_id"),
         explode(array(graft.plans.GraftFunctions.fp_minmax(lower(col("text"))))).as("fp"),

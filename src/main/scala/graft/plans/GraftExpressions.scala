@@ -418,8 +418,10 @@ case class DecimalSum(child: Expression, precision: Int, scale: Int, ansi: Boole
 /** Registration + Column-API entry points.
   *
   * [[GraftFunctions.register]] adds the expressions to the session's
-  * FunctionRegistry (idempotent); [[GraftSessionExtensions]] is the
-  * `spark.sql.extensions`-config path for cluster deployments.
+  * FunctionRegistry (idempotent); every Column wrapper calls it on the
+  * active session first, so only SQL text needs an explicit call.
+  * [[GraftSessionExtensions]] is the `spark.sql.extensions`-config
+  * path for cluster deployments.
   */
 object GraftFunctions {
 
@@ -505,50 +507,55 @@ object GraftFunctions {
     }
   }
 
-  def cosine_sim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
+  /** Calls kernel `name` after registering the kernels on the active
+    * session (a no-op once done), so no call site needs a
+    * [[register]] call of its own. */
+  private def call(name: String, args: Column*): Column = {
+    register(SparkSession.active)
+    call_function(name, args: _*)
+  }
 
-  def cosine_sim_d(a: Column, b: Column): Column = call_function("cosine_sim_d", a, b)
+  def cosine_sim(a: Column, b: Column): Column = call("cosine_sim", a, b)
 
-  def dot_d(a: Column, b: Column): Column = call_function("dot_d", a, b)
+  def cosine_sim_d(a: Column, b: Column): Column = call("cosine_sim_d", a, b)
 
-  def simhash60(tokens: Column): Column = call_function("simhash60", tokens)
+  def dot_d(a: Column, b: Column): Column = call("dot_d", a, b)
+
+  def simhash60(tokens: Column): Column = call("simhash60", tokens)
 
   def srp_band_sigs(emb: Column, bands: Int, planes: Int): Column =
-    call_function("srp_band_sigs", emb,
+    call("srp_band_sigs", emb,
       org.apache.spark.sql.functions.lit(bands), org.apache.spark.sql.functions.lit(planes))
 
-  def lsh_band_sigs(text: Column): Column = call_function("lsh_band_sigs", text)
+  def lsh_band_sigs(text: Column): Column = call("lsh_band_sigs", text)
 
   /** Segment one token under a rank-ordered merge table (flattened
     * [l0, r0, l1, r1, …] — the [[graft.operators.Bpe]] trainer's
     * output). */
   def bpe_segment(token: Column, merges: Seq[String]): Column =
-    call_function("bpe_segment", token,
+    call("bpe_segment", token,
       org.apache.spark.sql.functions.lit(merges.toArray))
 
-  def repetition_stats(text: Column): Column = call_function("repetition_stats", text)
+  def repetition_stats(text: Column): Column = call("repetition_stats", text)
 
-  def fp_minmax(text: Column): Column = call_function("fp_minmax", text)
+  def fp_minmax(text: Column): Column = call("fp_minmax", text)
 
   /** Exactly `sum(x.cast(DECIMAL(precision, scale)))` — same type,
     * value, nulls and errors — for a DOUBLE `x` and precision ≤ 18, on
     * unscaled longs ([[DecimalSum]]). The way to write an exact p ≤ 18
-    * sum. Registers the kernels on the active session first (a no-op
-    * once done), so call sites need no [[register]] call of their own. */
-  def decimal_sum(x: Column, precision: Int, scale: Int): Column = {
-    register(SparkSession.active)
-    call_function("decimal_sum", x,
+    * sum. */
+  def decimal_sum(x: Column, precision: Int, scale: Int): Column =
+    call("decimal_sum", x,
       org.apache.spark.sql.functions.lit(precision), org.apache.spark.sql.functions.lit(scale))
-  }
 
   /** Bloom filter over xxhash64 of `c` (binary, broadcastable). */
   def bloom_filter_agg(c: Column, estItems: Long, numBits: Long): Column =
-    call_function("bloom_filter_agg", org.apache.spark.sql.functions.xxhash64(c),
+    call("bloom_filter_agg", org.apache.spark.sql.functions.xxhash64(c),
       org.apache.spark.sql.functions.lit(estItems), org.apache.spark.sql.functions.lit(numBits))
 
   /** Membership probe against a [[bloom_filter_agg]] result. */
   def bloom_might_contain(bloom: Column, c: Column): Column =
-    call_function("bloom_might_contain", bloom,
+    call("bloom_might_contain", bloom,
       org.apache.spark.sql.functions.xxhash64(c))
 }
 

@@ -549,7 +549,6 @@ object EventStreams {
     * replayed batch's buckets are already present, nothing appends. */
   private[graft] def maintainBandIndex(batch: DataFrame, idxDir: String): Unit = {
     val s = batch.sparkSession
-    graft.plans.GraftFunctions.register(s)
     val idxSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "band INT, sig STRING, near_of BIGINT")
     val bands = batch

@@ -2,14 +2,16 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc plan inspector: prints the formatted physical plan of one
-  * SparkEntry query (after execution, so AQE's final plan is shown).
-  * Usage: runMain graft.tools.PlanDebug <queryName> [sfDir]
+/** Plan inspector behind the PLANS.md review workflow: executes each
+  * named SparkEntry query, then prints its formatted physical plan, so
+  * AQE's final plan and the initial plan both show. Not part of the
+  * driver contract — plan SHAPE assertions live in the specs.
+  * Usage: runMain graft.tools.PlanDebug <sfDir> <query>...
   */
 object PlanDebug {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
+    require(args.length >= 2, "usage: PlanDebug <sfDir> <query>...")
+    val dir = args(0)
     val spark = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -17,10 +19,14 @@ object PlanDebug {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val df = graft.SparkEntry.queries(name)(spark, dir)
-    df.count()
-    println(s"==== $name ====")
-    df.explain("formatted")
+    for (name <- args.drop(1)) {
+      val df = graft.SparkEntry.queries(name)(spark, dir)
+      // Run this Dataset's own QueryExecution (df.count() would plan a
+      // new one): that is what finalizes the AQE plan printed below.
+      df.queryExecution.toRdd.count()
+      println(s"==== $name ====")
+      df.explain("formatted")
+    }
     spark.stop()
   }
 }

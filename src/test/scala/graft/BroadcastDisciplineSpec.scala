@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions.broadcast
 
@@ -40,45 +40,32 @@ import org.apache.spark.sql.functions.broadcast
 class BroadcastDisciplineSpec extends SparkSpecBase {
   import BroadcastDisciplineSpec._
 
-  private def observed(name: String): Seq[String] = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.queryExecution.executedPlan.collect {
+  private def observed(plan: SparkPlan): Seq[String] =
+    plan.collect {
       case b: BroadcastExchangeExec => entityCols(b.child.output.map(_.name))
     }.filter(_.nonEmpty).map(_.mkString(",")).sorted
-  }
 
   test("no registered query broadcasts an entity-keyed relation; whitelisted signatures match their pins") {
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.get(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      ShuffleCensus.ensureWarm(spark, sfDir)
-      Dedup.clearCaches()
-      val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-        val hits = observed(name)
-        whitelist.get(name) match {
-          case None if hits.isEmpty => None
-          case None =>
-            Some(s"$name broadcasts ${hits.map(h => s"[$h]").mkString(" ")} (not whitelisted)")
-          case Some(Pinned(_, sig)) if hits == sig => None
-          case Some(Pinned(_, sig)) =>
-            // Covers both rot (query stopped broadcasting — remove the
-            // entry) and regression (a NEW broadcast appeared under a
-            // whitelisted name — re-justify and re-pin).
-            Some(s"$name signature drift: observed [${hits.mkString("; ")}] " +
-              s"!= pinned [${sig.mkString("; ")}]")
-        }
+    val offenders = surface.census.flatMap { case (name, plan) =>
+      val hits = observed(plan)
+      whitelist.get(name) match {
+        case None if hits.isEmpty => None
+        case None =>
+          Some(s"$name broadcasts ${hits.map(h => s"[$h]").mkString(" ")} (not whitelisted)")
+        case Some(Pinned(_, sig)) if hits == sig => None
+        case Some(Pinned(_, sig)) =>
+          // Covers both rot (query stopped broadcasting — remove the
+          // entry) and regression (a NEW broadcast appeared under a
+          // whitelisted name — re-justify and re-pin).
+          Some(s"$name signature drift: observed [${hits.mkString("; ")}] " +
+            s"!= pinned [${sig.mkString("; ")}]")
       }
-      assert(offenders.isEmpty,
-        s"entity-keyed broadcast violations:\n${offenders.mkString("\n")}")
-      val gone = whitelist.keys.toSeq.sorted.filterNot(SparkEntry.queries.contains)
-      assert(gone.isEmpty,
-        s"whitelist entries for unregistered queries (remove them):\n${gone.mkString("\n")}")
-    } finally {
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
-      Dedup.clearCaches()
     }
+    assert(offenders.isEmpty,
+      s"entity-keyed broadcast violations:\n${offenders.mkString("\n")}")
+    val gone = whitelist.keys.toSeq.sorted.filterNot(SparkEntry.queries.contains)
+    assert(gone.isEmpty,
+      s"whitelist entries for unregistered queries (remove them):\n${gone.mkString("\n")}")
   }
 
   test("witness: deliberately-broken plans broadcasting renamed entity relations are detected") {
@@ -90,11 +77,7 @@ class BroadcastDisciplineSpec extends SparkSpecBase {
     // BroadcastExchange must trip the detector.
     // AQE off: an AdaptiveSparkPlanExec wrapper hides the join's
     // BroadcastExchange from executedPlan.collect until execution.
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.get(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(ShuffleCensus.aqeOff, ShuffleCensus.broadcastOff) {
       import spark.implicits._
       def hitsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
         df.queryExecution.executedPlan.collect {
@@ -123,8 +106,6 @@ class BroadcastDisciplineSpec extends SparkSpecBase {
       val probeL = Seq(("u", 2L)).toDF("a", "y")
       assert(hitsOf(probeL.join(broadcast(lone), "a")).isEmpty,
         "a lone generic `a` column false-positived the group detector")
-    } finally {
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
     }
   }
 
@@ -141,45 +122,30 @@ class BroadcastDisciplineSpec extends SparkSpecBase {
     // relation (it caught assoc_rules' antecedent/consequent-aliased
     // vocab broadcast on its first run; the plan was fixed to shuffled
     // marginal joins rather than whitelisted).
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.get(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      Dedup.clearCaches()
-      val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-        val sus = SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.executedPlan.collect {
-            case b: BroadcastExchangeExec => suspectLeaves(b.child)
-          }.flatten.sorted
-        lineageWhitelist.get(name) match {
-          case None if sus.isEmpty => None
-          case None => Some(s"$name broadcasts suspect lineage [${sus.mkString("; ")}] (not whitelisted)")
-          case Some(Pinned(_, sig)) if sus == sig => None
-          case Some(Pinned(_, sig)) =>
-            Some(s"$name lineage drift: observed [${sus.mkString("; ")}] != pinned [${sig.mkString("; ")}]")
-        }
+    val offenders = surface.census.flatMap { case (name, plan) =>
+      val sus = plan.collect {
+        case b: BroadcastExchangeExec => suspectLeaves(b.child)
+      }.flatten.sorted
+      lineageWhitelist.get(name) match {
+        case None if sus.isEmpty => None
+        case None => Some(s"$name broadcasts suspect lineage [${sus.mkString("; ")}] (not whitelisted)")
+        case Some(Pinned(_, sig)) if sus == sig => None
+        case Some(Pinned(_, sig)) =>
+          Some(s"$name lineage drift: observed [${sus.mkString("; ")}] != pinned [${sig.mkString("; ")}]")
       }
-      assert(offenders.isEmpty,
-        s"suspect broadcast lineages:\n${offenders.mkString("\n")}")
-      val gone = lineageWhitelist.keys.toSeq.sorted.filterNot(SparkEntry.queries.contains)
-      assert(gone.isEmpty,
-        s"lineage whitelist entries for unregistered queries:\n${gone.mkString("\n")}")
-    } finally {
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
-      Dedup.clearCaches()
     }
+    assert(offenders.isEmpty,
+      s"suspect broadcast lineages:\n${offenders.mkString("\n")}")
+    val gone = lineageWhitelist.keys.toSeq.sorted.filterNot(SparkEntry.queries.contains)
+    assert(gone.isEmpty,
+      s"lineage whitelist entries for unregistered queries:\n${gone.mkString("\n")}")
   }
 
   test("lineage-tier witness: an entity-grouped aggregate broadcast is suspect whatever its column names") {
     // The classifier must flag a broadcast aggregate grouped by a
     // corpus-growing key even under fully generic output names — the
     // rename class the name tier cannot see.
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.get(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(ShuffleCensus.aqeOff, ShuffleCensus.broadcastOff) {
       import org.apache.spark.sql.functions.{col, count, lit}
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       // itemSimilarity-shaped: corpus relation aggregated by an
@@ -202,8 +168,6 @@ class BroadcastDisciplineSpec extends SparkSpecBase {
         }.flatten
       assert(ok.isEmpty,
         s"label-bounded aggregate false-positived the lineage classifier: $ok")
-    } finally {
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
     }
   }
 
@@ -216,22 +180,14 @@ class BroadcastDisciplineSpec extends SparkSpecBase {
     // materialized through a shuffle) has no legitimate use at 100 TB,
     // so it needs no whitelist: any appearance is a planning accident
     // (a dropped join condition, a cross that outgrew auto-broadcast).
+    // Read from the plans with auto-broadcast at its default: with it
+    // off, every size-broadcast BNLJ would plan as a Cartesian.
     import org.apache.spark.sql.execution.joins.CartesianProductExec
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      Dedup.clearCaches()
-      val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-        SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.collect {
-          case c: CartesianProductExec => c
-        }.nonEmpty
-      }
-      assert(offenders.isEmpty,
-        s"CartesianProduct in: ${offenders.mkString(", ")}")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", saved)
-      Dedup.clearCaches()
+    val offenders = surface.autoBroadcast.collect {
+      case (name, plan) if plan.collect { case c: CartesianProductExec => c }.nonEmpty => name
     }
+    assert(offenders.isEmpty,
+      s"CartesianProduct in: ${offenders.mkString(", ")}")
   }
 }
 

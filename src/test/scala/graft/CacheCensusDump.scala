@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-
 /** Survey of every DISTINCT cached relation the registered surface
   * materializes (deduped by CachedRDDBuilder, recursing into cache
   * builds and subqueries): its output schema, flagged when the cache
@@ -12,43 +8,15 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   * `sbt 'Test/runMain graft.CacheCensusDump'`. */
 object CacheCensusDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-cache-census")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkSpecBase.session
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.get(k))
+    val seen = ShuffleCensus.identitySet()
     val out = new StringBuilder
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      ShuffleCensus.ensureWarm(spark, sfDir)
-      graft.operators.Dedup.clearCaches()
-      val seen = java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-      SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
-        def visit(q: SparkPlan): Unit =
-          (q +: q.subqueriesAll).foreach(_.foreach {
-            case c: InMemoryTableScanExec =>
-              if (seen.add(c.relation.cacheBuilder)) {
-                val cols = c.relation.cachedPlan.output
-                  .map(a => s"${a.name}:${a.dataType.simpleString.take(24)}")
-                out ++= s"$name | ${cols.mkString(", ")}\n"
-                visit(c.relation.cachedPlan)
-              }
-            case _ => ()
-          })
-        visit(plan)
+    ShuffleCensus.surface(spark, sfDir).census.foreach { case (name, plan) =>
+      ShuffleCensus.cacheBuilds(plan, seen).foreach { cached =>
+        val cols = cached.output.map(a => s"${a.name}:${a.dataType.simpleString.take(24)}")
+        out ++= s"$name | ${cols.mkString(", ")}\n"
       }
-    } finally {
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
-      graft.operators.Dedup.clearCaches()
     }
     println(out.toString)
     java.nio.file.Files.write(

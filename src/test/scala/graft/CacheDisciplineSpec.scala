@@ -49,42 +49,18 @@ class CacheDisciplineSpec extends SparkSpecBase {
     * surface, the dump/spec-shared procedure: global builder dedup in
     * sorted query order, census config AQE-off/auto-broadcast-off. */
   private def sweep(): Map[String, Map[String, Int]] = {
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.get(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      ShuffleCensus.ensureWarm(spark, sfDir)
-      graft.operators.Dedup.clearCaches()
-      // Reference-identity set (not identityHashCode ints — they can
-      // collide and silently drop a build from the census).
-      val seen = java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-      // Signature MULTISET per query: a SECOND payload cache with an
-      // identical signature (e.g. another sub:array<double> slice in
-      // ann_ivf_pq) must fail the pin, not hide inside a Set.
-      val acc = scala.collection.mutable.Map.empty[String, Map[String, Int]]
-      SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
-        def visit(q: SparkPlan): Unit =
-          (q +: q.subqueriesAll).foreach(_.foreach {
-            case c: InMemoryTableScanExec =>
-              if (seen.add(c.relation.cacheBuilder)) {
-                flaggedSig(c.relation.cachedPlan).foreach { sig =>
-                  val m = acc.getOrElse(name, Map.empty)
-                  acc(name) = m + (sig -> (m.getOrElse(sig, 0) + 1))
-                }
-                visit(c.relation.cachedPlan)
-              }
-            case _ => ()
-          })
-        visit(plan)
+    val seen = ShuffleCensus.identitySet()
+    // Signature MULTISET per query: a SECOND payload cache with an
+    // identical signature (e.g. another sub:array<double> slice in
+    // ann_ivf_pq) must fail the pin, not hide inside a Set.
+    val acc = scala.collection.mutable.Map.empty[String, Map[String, Int]]
+    surface.census.foreach { case (name, plan) =>
+      ShuffleCensus.cacheBuilds(plan, seen).flatMap(flaggedSig).foreach { sig =>
+        val m = acc.getOrElse(name, Map.empty)
+        acc(name) = m + (sig -> (m.getOrElse(sig, 0) + 1))
       }
-      acc.toMap
-    } finally {
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
-      graft.operators.Dedup.clearCaches()
     }
+    acc.toMap
   }
 
   test("no registered query persists a payload-class column (pinned whitelist aside)") {

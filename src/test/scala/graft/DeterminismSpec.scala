@@ -222,4 +222,53 @@ class DeterminismSpec extends SparkSpecBase {
     val uses = files.map(_._2.split("decimal_sum\\(", -1).length - 1).sum
     assert(uses >= 20, s"only $uses decimal_sum( calls in src/main: is the pin still reading it?")
   }
+
+  /** `sum` aggregates over a DECIMAL(p ≤ 18) input anywhere in a
+    * physical plan the census reaches (main tree, subqueries, cache
+    * builds): Spark sums those with a BigDecimal per row, which
+    * `decimal_sum` computes exactly on longs. The optimizer already
+    * turns p ≤ 8 sums into long sums (the input becomes an
+    * UnscaledValue), so they are not flagged. */
+  private def narrowPlanSums(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.types.DecimalType
+    ShuffleCensus.reachable(plan).flatMap(_.flatMap(_.expressions.flatMap(_.collect {
+      case s: Sum if (s.child.dataType match {
+        case d: DecimalType => d.precision <= 18
+        case _ => false
+      }) => s.sql
+    }))).distinct
+  }
+
+  test("pin: no registered query's plan sums a DECIMAL(p<=18) with Spark's sum") {
+    // The plan-level face of the source pin above: it also sees a
+    // narrow decimal that reached `sum` through a variable or a column
+    // cast in an earlier step (tpch_q8's `sum(volume)` shape).
+    import org.apache.spark.sql.functions.{col, sum}
+    withConf(ShuffleCensus.aqeOff) {
+      val cast = spark.range(10).withColumn("v", (col("id") * 1.25).cast("decimal(12,2)"))
+      assert(narrowPlanSums(cast.agg(sum(col("v"))).queryExecution.executedPlan).nonEmpty,
+        "a sum over a column cast to decimal(12,2) one step earlier escaped the pin")
+      val exact = spark.range(10).agg(
+        graft.plans.GraftFunctions.decimal_sum(col("id") * 1.25, 12, 2))
+      assert(narrowPlanSums(exact.queryExecution.executedPlan).isEmpty,
+        "decimal_sum false-positived the pin")
+    }
+    val hits = surface.census.flatMap { case (name, plan) =>
+      val sums = narrowPlanSums(plan)
+      if (sums == narrowSumWhitelist.get(name).fold(Seq.empty[String])(_._2)) None
+      else Some(s"$name: ${sums.mkString("; ")}")
+    }
+    assert(hits.isEmpty,
+      "write these as GraftFunctions.decimal_sum(x, p, s), or re-pin a justified one:\n" +
+        hits.mkString("\n"))
+  }
+
+  /** Declared narrow `sum`s: query → (why it stays Spark's `sum`, the
+    * pinned signatures). Observed != pinned fails in either direction. */
+  private val narrowSumWhitelist: Map[String, (String, Seq[String])] = Map(
+    "sql_frontend" -> (
+      "the query is one SQL string that runs verbatim on Spark SQL and on " +
+        "DuckDB, whose text is its own oracle; DuckDB has no decimal_sum",
+      Seq("sum(CAST((lineitem.l_extendedprice * (1.0D - lineitem.l_discount)) AS DECIMAL(18,4)))")))
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Whole-surface unpartitioned-window guard — third of the discipline
@@ -23,40 +23,30 @@ class GlobalWindowDisciplineSpec extends SparkSpecBase {
   import GlobalWindowDisciplineSpec._
 
   test("every unpartitioned window runs over a declared bounded relation, matching its pinned signature") {
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      ShuffleCensus.ensureWarm(spark, sfDir)
-      Dedup.clearCaches()
-      def globals(name: String): Seq[String] = {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.queryExecution.executedPlan.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty =>
-            w.windowExpression.map(_.name).mkString(",")
-          case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
-            "group-limit"
-        }.sorted
+    // Read from the plans with auto-broadcast at its default.
+    def globals(plan: SparkPlan): Seq[String] =
+      plan.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty =>
+          w.windowExpression.map(_.name).mkString(",")
+        case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
+          "group-limit"
+      }.sorted
+    val offenders = surface.autoBroadcast.flatMap { case (name, plan) =>
+      val g = globals(plan)
+      whitelist.get(name) match {
+        case None if g.isEmpty => None
+        case None => Some(s"$name: global window(s) [${g.mkString("; ")}] (not whitelisted)")
+        case Some(PinnedWindows(_, sig)) if g == sig => None
+        case Some(PinnedWindows(_, sig)) =>
+          Some(s"$name window-signature drift: observed [${g.mkString("; ")}] " +
+            s"!= pinned [${sig.mkString("; ")}]")
       }
-      val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-        val g = globals(name)
-        whitelist.get(name) match {
-          case None if g.isEmpty => None
-          case None => Some(s"$name: global window(s) [${g.mkString("; ")}] (not whitelisted)")
-          case Some(PinnedWindows(_, sig)) if g == sig => None
-          case Some(PinnedWindows(_, sig)) =>
-            Some(s"$name window-signature drift: observed [${g.mkString("; ")}] " +
-              s"!= pinned [${sig.mkString("; ")}]")
-        }
-      }
-      assert(offenders.isEmpty,
-        s"unpartitioned-window violations:\n${offenders.mkString("\n")}")
-      val gone = whitelist.keys.toSeq.sorted.filterNot(SparkEntry.queries.contains)
-      assert(gone.isEmpty,
-        s"whitelist entries for unregistered queries:\n${gone.mkString("\n")}")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", saved)
-      Dedup.clearCaches()
     }
+    assert(offenders.isEmpty,
+      s"unpartitioned-window violations:\n${offenders.mkString("\n")}")
+    val gone = whitelist.keys.toSeq.sorted.filterNot(SparkEntry.queries.contains)
+    assert(gone.isEmpty,
+      s"whitelist entries for unregistered queries:\n${gone.mkString("\n")}")
   }
 
   test("witness: a global window over a raw corpus relation is detected; a post-limit one is not") {

@@ -274,19 +274,39 @@ class MemoDisciplineSpec extends SparkSpecBase {
     // builder returns and never reach this point. localCheckpoints
     // are RDD-level persists, not CacheManager entries — exempt by
     // construction, which is correct: they're lineage cuts, freed by
-    // GC/ContextCleaner, not pipeline caches.
-    import org.apache.spark.sql.graft.TestCache
-    TestCache.clearAll(spark)
-    graft.operators.Dedup.clearCaches()
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      SparkEntry.queries(name)(spark, sfDir)
-      ()
-    }
-    graft.operators.Dedup.clearCaches()
-    assert(TestCache.isEmpty(spark),
+    // GC/ContextCleaner, not pipeline caches. The shared walk
+    // ([[ShuffleCensus.surface]]) constructs the surface from an empty
+    // cache manager and records what its closing clearCaches leaves.
+    val walk = surface
+    assert(!walk.cachesAfterClear,
       "a .persist() escaped liveCaches (clearCaches cannot free it); " +
-        "persistent RDDs still registered: " +
-        spark.sparkContext.getPersistentRDDs.values.map(_.name).mkString("; "))
+        "persistent RDDs still registered: " + walk.persistentRdds.mkString("; "))
+  }
+
+  test("pin: only the shared walk iterates the registered surface in src/test") {
+    // Every whole-surface check reads ShuffleCensus.surface, which
+    // constructs each query twice per (JVM, sfDir): the artifact-warm
+    // pass and the recorded pass. A spec that iterated the registry
+    // itself would add a full construction pass (streaming replays,
+    // scratch writes) to every suite run. Lookups of named queries
+    // and `contains` checks are not walks.
+    val walkRef = """SparkEntry\.queries(?!\s*\(|\.contains\b)""".r
+    def walks(src: String): Int = walkRef.findAllIn(src).size
+    val registry = "SparkEntry" + ".queries"
+    assert(walks(s"$registry.keys.toSeq.sorted.foreach { n => () }") == 1)
+    assert(walks(s"val all = $registry; all.keys") == 1)
+    assert(walks(s"""$registry("eval_confusion")(spark, sfDir); $registry.contains(n)""") == 0)
+    val observed = Files.walk(Paths.get("src/test/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> walks(new String(Files.readAllBytes(p), "UTF-8")))
+      .filter(_._2 > 0).toMap
+    assert(observed == Map("ShuffleCensus.scala" -> 1),
+      s"registry iterations in src/test outside the shared walk: $observed — " +
+        "read ShuffleCensus.surface instead")
+    val queries = surface.queries.size
+    info(s"shared walk: ${ShuffleCensus.constructions} query constructions for " +
+      s"$queries registered queries over ${ShuffleCensus.walked} sfDir(s)")
+    assert(ShuffleCensus.constructions == 2 * queries * ShuffleCensus.walked)
   }
 
   test("witness: a memo race's loser unpersists its copy and adopts the winner") {

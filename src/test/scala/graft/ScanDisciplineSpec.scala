@@ -1,7 +1,6 @@
 package graft
 
-import graft.operators.Dedup
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
 /** Whole-surface scan-amplification guard — the round-14 companion to
   * [[BroadcastDisciplineSpec]]: under AQE-off planning, no registered
@@ -45,69 +44,42 @@ class ScanDisciplineSpec extends SparkSpecBase {
     * its shared CachedRDDBuilder — four lookups of one cache are ONE
     * build) contributes its cached plan's scans once, recursively —
     * under the bench's cold-cache rule that is exactly the corpus
-    * passes the query pays. */
-  private def census(name: String, hit: HeavyRule, floor: Int): Map[String, Int] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+    * passes the query pays. Subquery plans count too: the census walks
+    * the same trees as the shuffle census. */
+  private def census(plan: SparkPlan, hit: HeavyRule, floor: Int): Map[String, Int] = {
     def scans(p: SparkPlan): Seq[String] = p.collect {
       case f: FileSourceScanExec if f.requiredSchema.fields.exists(hit) =>
         f.relation.location.rootPaths.headOption.map(_.getName).getOrElse("?")
     }
-    // Reference-identity set (not identityHashCode ints): hash codes
-    // can collide, silently dropping a cache build from the census.
-    val seenBuilders = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-    var cachedPlans = Seq.empty[SparkPlan]
-    def visit(p: SparkPlan): Unit = p.collect {
-      case c: InMemoryTableScanExec => c.relation
-    }.foreach { r =>
-      if (seenBuilders.add(r.cacheBuilder)) {
-        cachedPlans :+= r.cachedPlan
-        visit(r.cachedPlan)
-      }
-    }
-    visit(plan)
-    (scans(plan) ++ cachedPlans.flatMap(scans))
+    ShuffleCensus.reachable(plan).flatMap(scans)
       .groupBy(identity).view.mapValues(_.size).toMap.filter(_._2 >= floor)
   }
 
   private def sweep(hit: HeavyRule, floor: Int,
       wl: Map[String, PinnedCensus], label: String): Unit = {
-    // Auto-broadcast off as well as AQE (round 15): a size-triggered
-    // BroadcastExchange can't reuse against the same subplan's
-    // ShuffleExchange, so with auto-broadcast ON the census counts
-    // depend on table SIZE (events_funnel read x4 at sf0.001, x3
-    // under the all-shuffle plan) — the pins must be plan-shape
-    // facts, not statistics artifacts.
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.get(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      ShuffleCensus.ensureWarm(spark, sfDir)
-      Dedup.clearCaches()
-      val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-        val hot = census(name, hit, floor)
-        wl.get(name) match {
-          case None if hot.isEmpty => None
-          case None => Some(s"$name: ${fmt(hot)} (not whitelisted)")
-          case Some(PinnedCensus(_, sig)) if hot == sig => None
-          case Some(PinnedCensus(_, sig)) =>
-            // Rot (scan count dropped — remove/re-pin) and regression
-            // (a new scan appeared under the entry) both land here.
-            Some(s"$name census drift: observed ${fmt(hot)} != pinned ${fmt(sig)}")
-        }
+    // The census plans have auto-broadcast off as well as AQE (round
+    // 15): a size-triggered BroadcastExchange can't reuse against the
+    // same subplan's ShuffleExchange, so with auto-broadcast ON the
+    // census counts depend on table SIZE (events_funnel read x4 at
+    // sf0.001, x3 under the all-shuffle plan) — the pins must be
+    // plan-shape facts, not statistics artifacts.
+    val offenders = surface.census.flatMap { case (name, plan) =>
+      val hot = census(plan, hit, floor)
+      wl.get(name) match {
+        case None if hot.isEmpty => None
+        case None => Some(s"$name: ${fmt(hot)} (not whitelisted)")
+        case Some(PinnedCensus(_, sig)) if hot == sig => None
+        case Some(PinnedCensus(_, sig)) =>
+          // Rot (scan count dropped — remove/re-pin) and regression
+          // (a new scan appeared under the entry) both land here.
+          Some(s"$name census drift: observed ${fmt(hot)} != pinned ${fmt(sig)}")
       }
-      assert(offenders.isEmpty,
-        s"$label scan-amplification violations:\n${offenders.mkString("\n")}")
-      val gone = wl.keys.toSeq.sorted.filterNot(SparkEntry.queries.contains)
-      assert(gone.isEmpty,
-        s"$label whitelist entries for unregistered queries:\n${gone.mkString("\n")}")
-    } finally {
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
-      Dedup.clearCaches()
     }
+    assert(offenders.isEmpty,
+      s"$label scan-amplification violations:\n${offenders.mkString("\n")}")
+    val gone = wl.keys.toSeq.sorted.filterNot(SparkEntry.queries.contains)
+    assert(gone.isEmpty,
+      s"$label whitelist entries for unregistered queries:\n${gone.mkString("\n")}")
   }
 
   test("no registered query reads a heavy column from the same table in 2+ scans (pinned whitelist aside)") {

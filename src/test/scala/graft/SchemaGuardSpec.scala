@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Dedup
 import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
 
 /** Output-schema guard for EVERY registered query: the round-11
@@ -18,9 +17,10 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
   *
   * Cost note: `df.schema` needs only analysis, but a minority of
   * queries do real work at CONSTRUCTION (streaming settles, scratch
-  * writes, Lloyd/fixpoint driver loops). They all run at sf0.001
-  * here — the same corpus every other spec exercises them on — so
-  * this sweep stays in tens of seconds and needs no hand-pinned
+  * writes, Lloyd/fixpoint driver loops). The schemas come from the
+  * shared walk ([[ShuffleCensus.surface]]), which constructs every
+  * query at sf0.001 once for all the whole-surface checks, so this
+  * spec adds no construction of its own and needs no hand-pinned
   * skip list that could silently rot.
   */
 class SchemaGuardSpec extends SparkSpecBase {
@@ -35,10 +35,9 @@ class SchemaGuardSpec extends SparkSpecBase {
     }
 
   test("no registered query exposes array/struct/map/binary output columns") {
-    Dedup.clearCaches()
-    val bad = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val cols = offending(SparkEntry.queries(name)(spark, sfDir).schema)
-      if (cols.isEmpty) None else Some(s"$name -> ${cols.mkString(", ")}")
+    val bad = surface.queries.flatMap { q =>
+      val cols = offending(q.schema)
+      if (cols.isEmpty) None else Some(s"${q.name} -> ${cols.mkString(", ")}")
     }
     assert(bad.isEmpty, s"non-scalar output columns:\n${bad.mkString("\n")}")
   }

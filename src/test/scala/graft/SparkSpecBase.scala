@@ -12,6 +12,12 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sfDir = "/root/testdata/sf0.001"
 
+  /** The registered surface at `sfDir`, as the shared walk recorded it. */
+  def surface: ShuffleCensus.Surface = ShuffleCensus.surface(spark, sfDir)
+
+  def withConf[A](settings: (String, String)*)(body: => A): A =
+    SparkSpecBase.withConf(spark, settings: _*)(body)
+
   /** Driver-side md5 hex — the repo's md5-only hashing rule makes this
     * the single most-reused reference helper across specs. */
   def md5hex(s: String): String =
@@ -48,5 +54,15 @@ object SparkSpecBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Run `body` with `settings` set in the session conf, then put back
+    * each key's previous value. */
+  def withConf[A](spark: SparkSession, settings: (String, String)*)(body: => A): A = {
+    val saved = settings.map { case (k, _) => k -> spark.conf.get(k) }
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

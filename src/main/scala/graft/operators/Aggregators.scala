@@ -500,9 +500,10 @@ object Aggregators {
     // MG pass (cold-cache rule violated for this one query), and the
     // leaked CacheManager entry was the trigger that exposed the
     // census suite-order dependence.
-    val pass1 = Dedup.memo(s, "hhpass1", dir)(Dedup.housePersist("hhpass1",
+    val pass1 = Dedup.memo(s, "hhpass1", dir)(
         words.groupBy()
-          .agg(mg(col("word")).as("cands"), count(lit(1)).as("n_total"))))
+          .agg(mg(col("word")).as("cands"), count(lit(1)).as("n_total"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val cands = pass1.select(explode(col("cands")).as("word"))
     val total = pass1.select(col("n_total"))
     words
@@ -632,13 +633,14 @@ object Aggregators {
     * group's values) ran twice and events was scanned three times. */
   def quantileByGroupApprox(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("event_type"), col("value"))
-    val est = graft.operators.Dedup.memo(s, "qgrpest", dir)(graft.operators.Dedup.housePersist("qgrpest",
+    val est = graft.operators.Dedup.memo(s, "qgrpest", dir)(
           ev.groupBy(col("event_type"))
             .agg(count(lit(1)).as("n_events"),
               expr(s"approx_percentile(value, array(0.5, 0.9, 0.99), $GkAccuracy)").as("pcts"),
               expr("percentile(value, 0.5)").as("e50"),
               expr("percentile(value, 0.9)").as("e90"),
-              expr("percentile(value, 0.99)").as("e99"))))
+              expr("percentile(value, 0.99)").as("e99"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val ranks = ev
       .join(broadcast(est.select(col("event_type"), col("pcts"))), "event_type")
       .groupBy(col("event_type"))

@@ -259,22 +259,6 @@ object Dedup {
     if (won == null) built else won
   }
 
-  /** Round-16 A/B instrumentation for the cache-census pins: memo
-    * tags listed in SPARK_GRAFT_NO_PERSIST (comma-separated) SKIP
-    * their persist, turning that memoized relation into plain lineage
-    * so each pinned payload cache's persist-vs-derive trade can be
-    * measured without a code fork (interleaved Bench runs, numbers in
-    * PLANS.md). Unset on every shipping path — results are identical
-    * either way, only the pass count changes. */
-  private val noPersistTags: Set[String] =
-    sys.env.get("SPARK_GRAFT_NO_PERSIST")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-
-  private[graft] def housePersist(tag: String, df: DataFrame): DataFrame =
-    if (noPersistTags(tag)) df
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
   /** MinHash signature + banding, one codegen'd pass per document:
     * the [[graft.plans.LshBandSigs]] expression walks the 8-shingles
     * array-locally (16 ints of running state — no shingle explosion,
@@ -323,10 +307,10 @@ object Dedup {
       val pairDocs = pairs.select(col("doc_a").as("doc_id"))
         .unionByName(pairs.select(col("doc_b").as("doc_id")))
         .distinct()
-      housePersist("tri",
-        Tables.spread(s, Tables.documents(s, dir), "doc_id")
-          .join(pairDocs, Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), trigramSet(col("text")).as("tri")))
+      Tables.spread(s, Tables.documents(s, dir), "doc_id")
+        .join(pairDocs, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), trigramSet(col("text")).as("tri"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     })
 
   /** Pair relation with both sides' trigram sets joined on. */
@@ -425,14 +409,15 @@ object Dedup {
     // one persisted relation, which the verify tail needs anyway;
     // the exploded relation derives FROM the cache, and df/cardinality
     // /rank are windows over it rather than join-backs.
-    val sets = memo(s, "setsimsets", dir)(housePersist("setsimsets",
+    val sets = memo(s, "setsimsets", dir)(
         Tables.documents(s, dir)
           .select(col("doc_id"), tokens(col("text")).as("t"))
           .filter(size(col("t")) >= 3)
           .select(col("doc_id"), sort_array(array_distinct(expr(
             """transform(sequence(1, size(t) - 2),
               |  i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1),
-              |    element_at(t, i + 2)))""".stripMargin))).as("set"))))
+              |    element_at(t, i + 2)))""".stripMargin))).as("set"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // No nested computeIfAbsent hazard: sets resolves BEFORE the
     // prefix builder enters the memoizer.
     val prefix = memo(s, "setsimpre", dir)({
@@ -587,7 +572,7 @@ object Dedup {
   /** SRP planes per band — the band space is EmbBands × 2^EmbPlanes
     * buckets, and with it FIXED the candidate self-join is QUADRATIC
     * in corpus size: bucket occupancy grows ∝ n, per-bucket pairs
-    * ∝ n². Measured (round 19, SrpOccupancyProbe + BENCH_scale_r19
+    * ∝ n². Measured (round 19, OccupancyProbe + BENCH_scale_r19
     * extension): at the 8×64 default, 10× vectors → 100.8× candidate
     * pairs (692 k → 69.8 M; max occupancy 176 → 1730; all 512
     * buckets saturated) and 48× wall-clock — the one superlinear
@@ -682,7 +667,7 @@ object Dedup {
     * k-means; this operator's exact-DECIMAL Lloyd is the oracle
     * contract). k ∝ √n balances the two at Θ(n^1.5) — the optimum
     * available inside the contract: max(n·k, n²/k) is minimized at
-    * k = √n. Measured by SemOccupancyProbe (OPTIMIZATION_r20.md):
+    * k = √n. Measured by OccupancyProbe (OPTIMIZATION_r20.md):
     * the fixed k=16 pair volume grows ~n² exactly as the SRP band
     * space did. */
   def semKFor(n: Long): Int =
@@ -799,7 +784,7 @@ object Dedup {
     // Persisted: consumed three times (both self-join sides + the
     // report join-back); uncached, each consumer re-runs the k·n
     // cosine argmax over the whole corpus.
-    val assigned = memo(s, "semassign", dir)(housePersist("semassign", {
+    val assigned = memo(s, "semassign", dir)({
       if (k <= Similarity.BroadcastAssignK) {
         val best = array_max(Similarity.scored(cents))
         eD.select(col("vec_id"), col("embedding"),
@@ -812,7 +797,7 @@ object Dedup {
         Similarity.assignBroadcast(s, eD, cents,
             carry = Seq("embedding"), withSim = true)
           .select(col("vec_id"), col("embedding"), col("cluster"), col("cent_sim"))
-    }))
+    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = assigned.alias("a")
     val b = assigned.alias("b")
     // Keep-priority comparison on the UNROUNDED centroid cosine (both

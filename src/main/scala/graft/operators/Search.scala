@@ -107,11 +107,12 @@ object Search {
     * DERIVE from it (before, each was its own branch re-running the
     * corpus tokenize: 3 text passes in bm25, 4 more in eval_rank). */
   private def bm25DocMeta(s: SparkSession, dir: String): DataFrame =
-    Dedup.memo(s, "bm25meta", dir)(Dedup.housePersist("bm25meta",
+    Dedup.memo(s, "bm25meta", dir)(
         Tables.documents(s, dir)
           .select(col("doc_id"), tokens(col("text")).as("t"))
           .select(col("doc_id"), size(col("t")).cast("long").as("dl"),
-            filter(col("t"), t => t.isin(QueryTerms: _*)).as("qt"))))
+            filter(col("t"), t => t.isin(QueryTerms: _*)).as("qt"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Query-term frequencies per doc, derived from [[bm25DocMeta]] —
     * one row per (doc, present query term). */

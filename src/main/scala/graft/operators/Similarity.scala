@@ -73,10 +73,11 @@ object Similarity {
     * NumLloyd+1 times — the standard "prepared vectors" intermediate
     * an index build materializes. */
   private[graft] def embD(s: SparkSession, dir: String): DataFrame =
-    Dedup.memo(s, "embd", dir)(Dedup.housePersist("embd",
+    Dedup.memo(s, "embd", dir)(
         Tables.spread(s, Tables.embeddings(s, dir), "vec_id")
           .select(col("vec_id"), col("embedding"),
-            col("embedding").cast("array<double>").as("emb_d"))))
+            col("embedding").cast("array<double>").as("emb_d"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Per-centroid (cos, -c_id, c_id) struct array over `emb_d`:
     * `array_max` of it picks the nearest centroid (highest cosine,
@@ -407,7 +408,8 @@ object Similarity {
     * the house cache rule: each Lloyd round plus the final coding
     * pass re-scans it. */
   private def pqMelted(s: SparkSession, dir: String): DataFrame =
-    Dedup.memo(s, "pqmelt", dir)(Dedup.housePersist("pqmelt", meltSubs(embD(s, dir))))
+    Dedup.memo(s, "pqmelt", dir)(meltSubs(embD(s, dir))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Nearest-codebook-entry assignment under L2, expressed through
     * dot products only: argmin ‖x−c‖² = argmax (x·c − ½‖c‖²), so
@@ -453,7 +455,7 @@ object Similarity {
         .select(col("m"), col("vec_id").cast("int").as("c_id"), col("sub").as("c_emb"))
       for (_ <- 0 until rounds)
         cents = pqMeans(pqAssign(melted, cents))
-      Dedup.housePersist("pqcents", cents)
+      cents.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     })
   }
 

@@ -195,7 +195,7 @@ object TextAnalysis {
   }
 
   private def persistedLmRel(df: DataFrame): DataFrame = {
-    val p = Dedup.housePersist("lmscore", df)
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.liveCaches.put(s"lmscore|${System.identityHashCode(p)}", p)
     p
   }

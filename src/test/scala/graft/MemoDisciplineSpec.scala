@@ -278,9 +278,9 @@ class MemoDisciplineSpec extends SparkSpecBase {
     // ([[ShuffleCensus.surface]]) constructs the surface from an empty
     // cache manager and records what its closing clearCaches leaves.
     val walk = surface
-    assert(!walk.cachesAfterClear,
+    assert(walk.survivors.isEmpty,
       "a .persist() escaped liveCaches (clearCaches cannot free it); " +
-        "persistent RDDs still registered: " + walk.persistentRdds.mkString("; "))
+        "caches still registered: " + walk.survivors.mkString("; "))
   }
 
   test("pin: only the shared walk iterates the registered surface in src/test") {
@@ -289,13 +289,16 @@ class MemoDisciplineSpec extends SparkSpecBase {
     // pass and the recorded pass. A spec that iterated the registry
     // itself would add a full construction pass (streaming replays,
     // scratch writes) to every suite run. Lookups of named queries
-    // and `contains` checks are not walks.
-    val walkRef = """SparkEntry\.queries(?!\s*\(|\.contains\b)""".r
+    // and `contains` checks are not walks. The declaration list the
+    // registry is derived from counts too.
+    val walkRef = """SparkEntry\.(queries|defs)\b(?!\s*\(|\.contains\b)""".r
     def walks(src: String): Int = walkRef.findAllIn(src).size
     val registry = "SparkEntry" + ".queries"
+    val declared = "SparkEntry" + ".defs"
     assert(walks(s"$registry.keys.toSeq.sorted.foreach { n => () }") == 1)
     assert(walks(s"val all = $registry; all.keys") == 1)
     assert(walks(s"""$registry("eval_confusion")(spark, sfDir); $registry.contains(n)""") == 0)
+    assert(walks(s"$declared.foreach(d => d.build(spark, sfDir))") == 1)
     val observed = Files.walk(Paths.get("src/test/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => p.getFileName.toString -> walks(new String(Files.readAllBytes(p), "UTF-8")))

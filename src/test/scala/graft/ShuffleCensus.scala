@@ -82,11 +82,11 @@ object ShuffleCensus {
   final case class Recorded(name: String, schema: StructType,
       censusPlan: SparkPlan, autoBroadcastPlan: SparkPlan)
 
-  /** The walk's record, in sorted query order. `cachesAfterClear` says
-    * whether any DataFrame cache survived the closing clearCaches, and
-    * `persistentRdds` names the RDDs still persisted then. */
-  final case class Surface(queries: Seq[Recorded], cachesAfterClear: Boolean,
-      persistentRdds: Seq[String]) {
+  /** The walk's record, in sorted query order. `survivors` has one line
+    * per DataFrame cache that survived the closing clearCaches: the
+    * recorded queries whose census plan scans it, or else the cached
+    * plan's tree. */
+  final case class Surface(queries: Seq[Recorded], survivors: Seq[String]) {
     def census: Seq[(String, SparkPlan)] = queries.map(q => q.name -> q.censusPlan)
     def autoBroadcast: Seq[(String, SparkPlan)] = queries.map(q => q.name -> q.autoBroadcastPlan)
   }
@@ -148,8 +148,14 @@ object ShuffleCensus {
       }
     }
     graft.operators.Dedup.clearCaches()
-    Surface(recorded, !TestCache.isEmpty(spark),
-      spark.sparkContext.getPersistentRDDs.values.map(_.name).toSeq)
+    Surface(recorded, TestCache.entries(spark).map { case (builder, plan) =>
+      val scanners = recorded.filter(q => reachable(q.censusPlan).exists(_.exists {
+        case scan: InMemoryTableScanExec => scan.relation.cacheBuilder eq builder
+        case _ => false
+      })).map(_.name)
+      if (scanners.nonEmpty) scanners.mkString("scanned by ", ", ", "")
+      else "scanned by no recorded query:\n" + plan.treeString
+    })
   }
 
   /** Census of the whole registered surface, sorted query order —

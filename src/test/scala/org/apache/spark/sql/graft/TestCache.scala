@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{CacheManager, CachedData}
+import org.apache.spark.sql.execution.columnar.CachedRDDBuilder
 
 /** Test-only accessor for the session's CacheManager (the [[TestBus]]
   * pattern for `private[sql]` state): lets the memo-lifecycle sweep
@@ -14,9 +17,17 @@ object TestCache {
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
 
-  /** True iff no DataFrame/Dataset cache is registered. localCheckpoint
-    * RDD persists are NOT CacheManager entries and don't count. */
-  def isEmpty(s: SparkSession): Boolean = cm(s).isEmpty
+  /** Every registered DataFrame/Dataset cache: its builder (shared by
+    * each InMemoryTableScanExec that reads the cache) and its logical
+    * plan. localCheckpoint RDD persists are NOT CacheManager entries
+    * and don't appear. CacheManager keeps its entry list private, so
+    * this reads it reflectively. */
+  def entries(s: SparkSession): Seq[(CachedRDDBuilder, LogicalPlan)] = {
+    val list = classOf[CacheManager].getDeclaredMethod("cachedData")
+    list.setAccessible(true)
+    list.invoke(cm(s)).asInstanceOf[IndexedSeq[CachedData]]
+      .map(e => e.cachedRepresentation.cacheBuilder -> e.plan)
+  }
 
   /** Drop every registered cache — the sweep's clean-slate baseline
     * (suite order must not leave another spec's caches behind). */

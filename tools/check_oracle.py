@@ -7,6 +7,8 @@ Reads each <outDir>/<name>/ parquet (Spark output) and runs the
 corresponding oracle SQL from <outDir>/oracle_sql.json in DuckDB with
 the sf tables registered as views. Sorts columns by name, then rows,
 and compares cell-by-cell (exact, after canonicalizing NaN/None).
+A dumped output with no oracle entry fails: every registered query
+declares one, so it can only be a stale directory or a broken dump.
 
 Each PASS/FAIL line carries that oracle's wall time (Spark output read,
 DuckDB run and compare); the run ends with the process's peak RSS and
@@ -56,7 +58,7 @@ def main(sf_dir: str, out_dir: str) -> int:
     # Schema guard (the round-11 inverted_index class): the driver's
     # checker lexsorts ALL columns in pandas, where list/array/dict
     # cells are unhashable — any such column in ANY query output
-    # (oracle-checked or rows-only) makes that query unverifiable by
+    # makes that query unverifiable by
     # the harness that matters, so it fails the gate here first.
     for d in sorted(glob.glob(f"{out_dir}/*/")):
         name = d.rstrip("/").split("/")[-1]
@@ -101,13 +103,13 @@ def main(sf_dir: str, out_dir: str) -> int:
         else:
             print(f"PASS {name} ({len(s)} rows) {took}")
             n_pass += 1
-    # rows-only queries (no oracle)
+    # Every registered query declares an oracle, so a dumped output
+    # without one is a stale directory or a broken dump.
     for d in sorted(glob.glob(f"{out_dir}/*/")):
         name = d.rstrip("/").split("/")[-1]
         if name not in oracle:
-            files = glob.glob(f"{d}/*.parquet")
-            n = sum(len(pd.read_parquet(f)) for f in files) if files else 0
-            print(f"ROWS {name}: {n} rows")
+            print(f"FAIL {name}: output has no oracle in oracle_sql.json")
+            n_fail += 1
     # ru_maxrss is in KiB on Linux: the peak of this process, DuckDB included.
     peak_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
     print(f"\noracle wall {sum(wall.values()):.1f}s over {len(wall)} oracles, "

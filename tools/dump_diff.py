@@ -9,9 +9,15 @@ between JVMs: parquet-mr lists each column chunk's encodings from a
 hash set, in an order that changes from run to run. So a query counts
 as identical when everything before the footer is byte-identical and
 the decoded footer (schema, key-value metadata, row groups) and rows,
-in order, are equal. Exits 1 if any query differs or is missing.
+in order, are equal.
+
+It also compares the two dumps' oracle_sql.json key by key, parsed:
+Verify writes the manifest by iterating a map, so its key order is
+not part of what it says. Exits 1 if any query output or oracle
+differs or is missing from one dump.
 """
 import glob
+import json
 import os
 import struct
 import sys
@@ -55,7 +61,16 @@ def main(a_dir: str, b_dir: str) -> int:
         print(f"DIFFER {name}")
     for name in missing:
         print(f"ONLY-ONE {name}")
-    return 1 if differ or missing else 0
+    oa, ob = (json.load(open(os.path.join(d, "oracle_sql.json"))) for d in (a_dir, b_dir))
+    o_differ = sorted(k for k in oa.keys() & ob.keys() if oa[k] != ob[k])
+    o_missing = sorted(oa.keys() ^ ob.keys())
+    print(f"oracle_sql.json: {len(oa.keys() & ob.keys()) - len(o_differ)} identical, "
+          f"{len(o_differ)} differ, {len(o_missing)} in only one dump")
+    for name in o_differ:
+        print(f"ORACLE-DIFFER {name}")
+    for name in o_missing:
+        print(f"ORACLE-ONLY-ONE {name}")
+    return 1 if differ or missing or o_differ or o_missing else 0
 
 
 if __name__ == "__main__":

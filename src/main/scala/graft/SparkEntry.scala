@@ -1153,7 +1153,7 @@ object SparkEntry {
         | TRUE AS p90_within_tol,
         | TRUE AS p99_within_tol
         |FROM events GROUP BY 1""".stripMargin),
-    // GK estimate vs t-digest can't hash-match; the driver checks the
+    // GK estimate vs t-digest can't hash-match; the oracle compares the
     // exact percentiles (quantile_cont parity) + in-plan ≤1% booleans.
     QueryDef("quantile_report_approx", Aggregators.quantileReportApproxChecked, _ =>
       """SELECT round(quantile_cont(o_totalprice, 0.5), 4) AS p50,

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   *   n·k·(NumLloyd+1), so the ledger shows both sides of the k trade
   *   (pair stage shrinks as 1/k, assignment work grows as k).
   *
-  * Run: `sbt 'Test/runMain graft.OccupancyProbe /root/testdata/sf0.1 /root/scratch/sf1'`. */
+  * Run: `sbt 'Test/runMain graft.OccupancyProbe <sf-dir> [<sf-dir> ...]'`,
+  * e.g. an sf0.1 dir and a larger copy made by tools/synth_scale.py. */
 object OccupancyProbe {
   /** Candidate pairs, max/mean occupancy and non-empty bucket count of
     * a relation with one row per (bucket key, member). */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import java.sql.Timestamp
 
 /** Structured Streaming versions of the event analytics (SURVEY §2.3
@@ -75,6 +75,28 @@ object EventStreams {
 
   private val replaySeq = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Start a replay's streaming query with its state partition count
+    * taken from the replay's input bound. A streaming query pins
+    * `spark.sql.shuffle.partitions` at start as its state partition
+    * count, and each state partition writes its own state-store and
+    * checkpoint files every batch, so a bounded run pays per
+    * partition, not per row:
+    *  - a `capped` input ([[EventReplayCap]], [[ReplayCap]]) holds at
+    *    most the cap's rows at every sf: one state partition;
+    *  - a whole-table input grows with sf: `min(4, defaultParallelism)`
+    *    partitions, one task wave (a production stream sizes this to
+    *    its state volume).
+    * Scoped set/restore — queries run sequentially through
+    * Verify/Bench. */
+  private def startReplay(s: SparkSession, capped: Boolean)(
+      start: => StreamingQuery): StreamingQuery = {
+    val partsKey = "spark.sql.shuffle.partitions"
+    val saved = s.conf.get(partsKey)
+    val parts = if (capped) 1 else math.min(4, s.sparkContext.defaultParallelism)
+    try { s.conf.set(partsKey, parts.toString); start }
+    finally s.conf.set(partsKey, saved)
+  }
+
   /** Run a streaming plan to quiescence against a one-micro-batch
     * replay and return the settled memory-sink table. The collect
     * feeding the MemoryStream is a replay-harness seam (bounded by
@@ -82,74 +104,48 @@ object EventStreams {
     * thing under test. Sink names are unique per call so bench reps
     * don't collide. */
   private def runReplay[A](s: SparkSession, data: Seq[A],
-      plan: Dataset[A] => DataFrame, mode: OutputMode)(
+      plan: Dataset[A] => DataFrame, mode: OutputMode, capped: Boolean)(
       implicit enc: org.apache.spark.sql.Encoder[A]): DataFrame = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
     input.addData(data)
-    settle(s, plan(input.toDS()), mode)
+    settle(s, plan(input.toDS()), mode, capped)
   }
 
   /** Run a streaming DataFrame to quiescence into a memory sink and
     * return the settled table. The only driver-side materialization
     * is the settled RESULT (bounded by the aggregation's output, not
-    * the input stream); the sink view is dropped so bench reps don't
-    * pin result copies in the catalog. */
-  private def settle(s: SparkSession, streaming: DataFrame, mode: OutputMode): DataFrame =
-    settleWith(s, streaming, mode)(_.processAllAvailable())
+    * the input stream). */
+  private def settle(s: SparkSession, streaming: DataFrame, mode: OutputMode,
+      capped: Boolean): DataFrame =
+    settleWith(s, streaming, mode, capped)(_.processAllAvailable())
 
   /** [[settle]] with a caller-supplied drive loop — the sessionize
     * replay feeds its MemoryStream BETWEEN `processAllAvailable()`
-    * calls to force real multi-micro-batch state updates. */
-  private def settleWith(s: SparkSession, streaming: DataFrame, mode: OutputMode)(
-      drive: org.apache.spark.sql.streaming.StreamingQuery => Unit): DataFrame = {
+    * calls to force real multi-micro-batch state updates.
+    *
+    * The sink is settled when `drive` returns, Append mode included.
+    * Append emits a window only when a LATER batch's watermark closes
+    * it — for the last windows, the no-data batch Spark runs after
+    * the last data batch advances the watermark. `processAllAvailable()`
+    * waits for that batch too: the micro-batch loop reports "no new
+    * data" (what wakes the caller) only when no source has new data
+    * AND the last batch's plan needs no further batch, i.e. after the
+    * watermark-closing no-data batch has committed. */
+  private def settleWith(s: SparkSession, streaming: DataFrame, mode: OutputMode,
+      capped: Boolean)(drive: StreamingQuery => Unit): DataFrame = {
     val name = s"graft_stream_replay_${replaySeq.incrementAndGet()}"
-    // A streaming query pins its state partition count at start; for
-    // a bounded run-to-quiescence, 32 state-store tasks per stateful
-    // stage are pure overhead (a production stream sizes this to its
-    // state volume). Scoped set/restore — queries run sequentially
-    // through Verify/Bench.
-    val partsKey = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(partsKey)
-    val q =
-      try {
-        s.conf.set(partsKey, "4")
-        streaming.writeStream
-          .format("memory").queryName(name).outputMode(mode).start()
-      } finally s.conf.set(partsKey, saved)
-    try {
-      drive(q)
-      // Append emits a window only when a LATER batch's watermark
-      // closes it — including the no-data batch Spark schedules after
-      // the last data batch advances the watermark.
-      // processAllAvailable() guarantees all SOURCE data is committed,
-      // but the watermark-closing no-data batch carries no source
-      // data, so StreamingSpec's boundary test polls for it; the
-      // oracle-gated entries must not be exposed to the same race.
-      // Settlement: (sink row count, last progressed batchId) stable
-      // across TWO consecutive 100 ms gaps with no trigger in flight.
-      // A single-gap count check could pass while the no-data batch
-      // is merely not yet SCHEDULED (descheduled microbatch thread on
-      // a loaded box); requiring the batchId to also hold still for
-      // two windows closes that gap — a pending no-data batch bumps
-      // batchId the moment it runs. Normally ~4 cheap local counts;
-      // the 15 s ceiling matches the spec's poll budget.
-      if (mode == OutputMode.Append) {
-        val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-        def snap(): (Long, Long) = {
-          while (q.status.isTriggerActive && System.nanoTime() < deadline)
-            Thread.sleep(20)
-          (s.table(name).count(), Option(q.lastProgress).map(_.batchId).getOrElse(-1L))
-        }
-        var last = snap()
-        var confirms = 0
-        while (confirms < 2 && System.nanoTime() < deadline) {
-          Thread.sleep(100)
-          val cur = snap()
-          if (cur == last) confirms += 1 else { confirms = 0; last = cur }
-        }
-      }
-    } finally q.stop()
+    val q = startReplay(s, capped) {
+      streaming.writeStream
+        .format("memory").queryName(name).outputMode(mode).start()
+    }
+    try drive(q) finally q.stop()
+    takeSink(s, name)
+  }
+
+  /** The memory sink `name` as a local relation; the sink view is
+    * dropped so bench reps don't pin result copies in the catalog. */
+  private def takeSink(s: SparkSession, name: String): DataFrame = {
     val settled = s.table(name)
     val out = s.createDataFrame(
       new java.util.ArrayList(java.util.Arrays.asList(settled.collect(): _*)),
@@ -180,7 +176,7 @@ object EventStreams {
     * the overhead of 4). */
   def windowedCountsFileStream(s: SparkSession, dir: String): DataFrame =
     settle(s, windowedCounts(eventsFileSourceTimeOrdered(s, dir, "evordered")),
-      OutputMode.Complete)
+      OutputMode.Complete, capped = false)
 
   /** #39e `Trigger.AvailableNow` face of the windowed aggregation —
     * the batch-incremental deployment pattern that replaced the
@@ -196,26 +192,17 @@ object EventStreams {
     * replacing the done-file convention. */
   def windowedCountsAvailableNow(s: SparkSession, dir: String): DataFrame = {
     val name = s"graft_avnow_${replaySeq.incrementAndGet()}"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(partsKey)
-    val q =
-      try {
-        s.conf.set(partsKey, "4")
-        windowedCounts(eventsFileSourceTimeOrdered(s, dir, "evordered"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Complete)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally s.conf.set(partsKey, saved)
+    val q = startReplay(s, capped = false) {
+      windowedCounts(eventsFileSourceTimeOrdered(s, dir, "evordered"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Complete)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }
     // AvailableNow self-terminates once the start-time offsets are
     // processed — no drive loop, no explicit stop.
     q.awaitTermination()
-    val settled = s.table(name)
-    val out = s.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(settled.collect(): _*)),
-      settled.schema)
-    s.catalog.dropTempView(name)
-    out
+    takeSink(s, name)
   }
 
   /** #39b REAL-SINK face of the windowed aggregation: the same
@@ -241,18 +228,14 @@ object EventStreams {
   def windowedCountsParquetSink(s: SparkSession, dir: String): DataFrame = {
     val out = graft.sources.FileRoundTrips.scratch("evsinkout", dir)
     val stream = eventsFileSourceTimeOrdered(s, dir, "evordered")
-    val partsKey = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(partsKey)
-    val q =
-      try {
-        s.conf.set(partsKey, "4")
-        windowedCounts(stream).writeStream
-          .outputMode(OutputMode.Complete)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            batch.write.mode("overwrite").parquet(out)
-          }
-          .start()
-      } finally s.conf.set(partsKey, saved)
+    val q = startReplay(s, capped = false) {
+      windowedCounts(stream).writeStream
+        .outputMode(OutputMode.Complete)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          batch.write.mode("overwrite").parquet(out)
+        }
+        .start()
+    }
     try q.processAllAvailable() finally q.stop()
     s.read.parquet(out)
   }
@@ -287,21 +270,17 @@ object EventStreams {
       dir: String, root: String): DataFrame = {
     new java.io.File(root).mkdirs()
     val stream = eventsFileSourceTimeOrdered(s, dir, "evordered")
-    val partsKey = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(partsKey)
-    val q =
-      try {
-        s.conf.set(partsKey, "4")
-        windowedCounts(stream).writeStream
-          .outputMode(OutputMode.Complete)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-            val v = batchId.toInt + 1
-            batch.write.mode("overwrite").parquet(s"$root/snap_$v")
-            if (graft.sources.FileRoundTrips.currentSnapshotOpt(root).forall(_ < v))
-              graft.sources.FileRoundTrips.commitSnapshot(root, v)
-          }
-          .start()
-      } finally s.conf.set(partsKey, saved)
+    val q = startReplay(s, capped = false) {
+      windowedCounts(stream).writeStream
+        .outputMode(OutputMode.Complete)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+          val v = batchId.toInt + 1
+          batch.write.mode("overwrite").parquet(s"$root/snap_$v")
+          if (graft.sources.FileRoundTrips.currentSnapshotOpt(root).forall(_ < v))
+            graft.sources.FileRoundTrips.commitSnapshot(root, v)
+        }
+        .start()
+    }
     try q.processAllAvailable() finally q.stop()
     val cur = graft.sources.FileRoundTrips.currentSnapshot(root)
     s.read.parquet(s"$root/snap_$cur")
@@ -324,7 +303,7 @@ object EventStreams {
     * [[windowedCountsFileStream]]. */
   def windowedCountsAppendFileStream(s: SparkSession, dir: String): DataFrame =
     settle(s, windowedCounts(eventsFileSourceTimeOrdered(s, dir, "evordered")),
-      OutputMode.Append)
+      OutputMode.Append, capped = false)
 
   /** Time-ordered scratch copies, each with its schema: the copy is
     * written once per (session, sf), so its schema is read once, on
@@ -416,7 +395,7 @@ object EventStreams {
     * determinism-by-construction as [[windowedCountsAppendFileStream]]. */
   def sessionWindowsFileStream(s: SparkSession, dir: String): DataFrame =
     settle(s, sessionWindows(eventsFileSourceTimeOrdered(s, dir, "evordered")),
-      OutputMode.Append)
+      OutputMode.Append, capped = false)
 
   /** MemoryStream replay harness for [[windowedCounts]] (the driver
     * entry is [[windowedCountsFileStream]], the distributed-source
@@ -428,7 +407,8 @@ object EventStreams {
     val events = graft.Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toIndexedSeq
-    runReplay[Event](s, events, ds => windowedCounts(ds.toDF()), OutputMode.Complete)
+    runReplay[Event](s, events, ds => windowedCounts(ds.toDF()), OutputMode.Complete,
+      capped = false)
   }
 
   /** #37c/#39 driver surface for [[slidingCounts]] — the DISTRIBUTED
@@ -440,7 +420,7 @@ object EventStreams {
     * the watermark). */
   def slidingCountsFileStream(s: SparkSession, dir: String): DataFrame =
     settle(s, slidingCounts(eventsFileSourceTimeOrdered(s, dir, "evordered")),
-      OutputMode.Complete)
+      OutputMode.Complete, capped = false)
 
   /** MemoryStream replay harness for [[slidingCounts]] (the driver
     * entry is [[slidingCountsFileStream]], the distributed-source
@@ -453,7 +433,8 @@ object EventStreams {
     val events = graft.Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toIndexedSeq
-    runReplay[Event](s, events, ds => slidingCounts(ds.toDF()), OutputMode.Complete)
+    runReplay[Event](s, events, ds => slidingCounts(ds.toDF()), OutputMode.Complete,
+      capped = false)
   }
 
   /** The MemoryStream replay harness must collect its feed, so the
@@ -508,7 +489,8 @@ object EventStreams {
     * [[docsFileSourceTimeOrdered]]); an UNBOUNDED feed keeps the
     * horizon semantics and is deliberately not batch-equal. */
   def dedupExactStreamReplay(s: SparkSession, dir: String): DataFrame =
-    settle(s, dedupExactStream(docsFileSourceTimeOrdered(s, dir)), OutputMode.Append)
+    settle(s, dedupExactStream(docsFileSourceTimeOrdered(s, dir)), OutputMode.Append,
+      capped = true)
       .agg(count(lit(1)).as("n_unique_docs"),
         count_distinct(col("text")).as("n_distinct_texts"))
 
@@ -576,17 +558,13 @@ object EventStreams {
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], idxSchema)
       .write.mode("overwrite").parquet(idxDir)
     val ckpt = graft.sources.FileRoundTrips.freshScratch("ingestbandidx_ckpt", dir)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(partsKey)
-    val q =
-      try {
-        s.conf.set(partsKey, "4")
-        docsFileSourceTimeOrdered(s, dir).writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            maintainBandIndex(batch, idxDir))
-          .start()
-      } finally s.conf.set(partsKey, saved)
+    val q = startReplay(s, capped = true) {
+      docsFileSourceTimeOrdered(s, dir).writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((batch: DataFrame, _: Long) =>
+          maintainBandIndex(batch, idxDir))
+        .start()
+    }
     try q.processAllAvailable() finally q.stop()
     s.read.schema(idxSchema).parquet(idxDir)
   }
@@ -618,17 +596,13 @@ object EventStreams {
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], idxSchema)
       .write.mode("overwrite").parquet(idxDir)
     val ckpt = graft.sources.FileRoundTrips.freshScratch("ingestidx_ckpt", dir)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(partsKey)
-    val q =
-      try {
-        s.conf.set(partsKey, "4")
-        docsFileSourceTimeOrdered(s, dir).writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            maintainDedupIndex(batch, idxDir))
-          .start()
-      } finally s.conf.set(partsKey, saved)
+    val q = startReplay(s, capped = true) {
+      docsFileSourceTimeOrdered(s, dir).writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((batch: DataFrame, _: Long) =>
+          maintainDedupIndex(batch, idxDir))
+        .start()
+    }
     try q.processAllAvailable() finally q.stop()
     s.read.schema(idxSchema).parquet(idxDir)
   }
@@ -654,18 +628,14 @@ object EventStreams {
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], gridSchema)
       .write.mode("overwrite").parquet(gridDir)
     val ckpt = graft.sources.FileRoundTrips.freshScratch("cmsgrid_ckpt", dir)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(partsKey)
-    val q =
-      try {
-        s.conf.set(partsKey, "4")
-        eventsFileSourceTimeOrdered(s, dir, "evordered").writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            graft.operators.Aggregators.cmsGridOf(batch.select(col("user_id")))
-              .write.mode("append").parquet(gridDir))
-          .start()
-      } finally s.conf.set(partsKey, saved)
+    val q = startReplay(s, capped = false) {
+      eventsFileSourceTimeOrdered(s, dir, "evordered").writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((batch: DataFrame, _: Long) =>
+          graft.operators.Aggregators.cmsGridOf(batch.select(col("user_id")))
+            .write.mode("append").parquet(gridDir))
+        .start()
+    }
     try q.processAllAvailable() finally q.stop()
     val settled = s.read.schema(gridSchema).parquet(gridDir)
       .groupBy(col("r"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
@@ -702,7 +672,7 @@ object EventStreams {
         .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
         .groupBy()
         .agg(mg(col("word")).as("cands"), count(lit(1)).as("n_total")),
-      OutputMode.Complete)
+      OutputMode.Complete, capped = true)
     val words = graft.Tables.documents(s, dir)
       .filter(col("doc_id") < ReplayCap)
       .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
@@ -747,24 +717,34 @@ object EventStreams {
   def sessionizeTwsStreamReplay(s: SparkSession, dir: String): DataFrame =
     withRocksDbState(s) { sessionizeReplayWith(s, dir)(sessionizeTws(_).toDF()) }
 
-  private def sessionizeReplayWith(s: SparkSession, dir: String)(
+  /** The capped event window ([[EventReplayCap]]) replayed through
+    * `plan` in TWO real micro-batches split at the time-ordered
+    * midpoint: batch 1 wholly precedes batch 2, so nothing is late,
+    * and state opened in batch 1 must carry into batch 2. The split
+    * sorts by the full (ts, event_id) order, microseconds included.
+    * The feed collect is the bounded replay-harness seam. */
+  private[graft] def twoBatchReplay(s: SparkSession, dir: String, mode: OutputMode)(
       plan: Dataset[Event] => DataFrame): DataFrame = {
     import s.implicits._
     val events = graft.Tables.events(s, dir)
       .filter(col("event_id") < EventReplayCap)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].collect().sortBy(e => (e.ts.getTime, e.event_id))
-    // Time-ordered split: batch 1 wholly precedes batch 2, so nothing
-    // is late (NoTimeout state, event-time gap logic only).
+      .as[Event].collect()
+      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
     val (b1, b2) = events.splitAt(events.length / 2)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val settled = settleWith(s, plan(input.toDS()), OutputMode.Update) { q =>
+    settleWith(s, plan(input.toDS()), mode, capped = true) { q =>
       input.addData(b1)
       q.processAllAvailable()
       input.addData(b2)
       q.processAllAvailable()
     }
+  }
+
+  private def sessionizeReplayWith(s: SparkSession, dir: String)(
+      plan: Dataset[Event] => DataFrame): DataFrame = {
+    val settled = twoBatchReplay(s, dir, OutputMode.Update)(plan)
     // Guard the collapse assumption instead of trusting it: "latest
     // update wins" is the row with max n_events (strictly increasing
     // per update), and struct-max equals it ONLY while both counters
@@ -837,27 +817,11 @@ object EventStreams {
     * to the batch face's channel report — Append emit-once makes the
     * settled sink equal the batch answer row-for-row, so the face
     * shares the batch oracle over the same capped window. */
-  def attributionStreamReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val events = graft.Tables.events(s, dir)
-      .filter(col("event_id") < EventReplayCap)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].collect()
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    val (b1, b2) = events.splitAt(events.length / 2)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val settled = settleWith(s, attribute(input.toDS()).toDF(), OutputMode.Append) { q =>
-      input.addData(b1)
-      q.processAllAvailable()
-      input.addData(b2)
-      q.processAllAvailable()
-    }
-    settled
+  def attributionStreamReplay(s: SparkSession, dir: String): DataFrame =
+    twoBatchReplay(s, dir, OutputMode.Append)(attribute(_).toDF())
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n_conversions"),
         round(sum(col("value")), 2).as("attributed_value"))
-  }
 
   /** Event-time TTL for the attribution carry (round-15 verdict item
     * 5): a purchase credits its last preceding touch only if the
@@ -941,27 +905,11 @@ object EventStreams {
     * SAME horizon CASE the state function applies, so a corpus where
     * the TTL does bite still hash-matches; StreamingSpec drives the
     * eviction path itself with a controlled feed. */
-  def attributionTtlStreamReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val events = graft.Tables.events(s, dir)
-      .filter(col("event_id") < EventReplayCap)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].collect()
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    val (b1, b2) = events.splitAt(events.length / 2)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val settled = settleWith(s, attributeTtl(input.toDS()).toDF(), OutputMode.Append) { q =>
-      input.addData(b1)
-      q.processAllAvailable()
-      input.addData(b2)
-      q.processAllAvailable()
-    }
-    settled
+  def attributionTtlStreamReplay(s: SparkSession, dir: String): DataFrame =
+    twoBatchReplay(s, dir, OutputMode.Append)(attributeTtl(_).toDF())
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n_conversions"),
         round(sum(col("value")), 2).as("attributed_value"))
-  }
 
   case class FunnelState(t1: Option[java.sql.Timestamp],
       t2: Option[java.sql.Timestamp], t3: Option[java.sql.Timestamp])
@@ -1041,30 +989,22 @@ object EventStreams {
     * counts (step ≥ k) — row-for-row the batch face's report, so the
     * face shares the batch oracle over the same capped window. The
     * feed collect is the bounded replay-harness seam. */
-  def funnelStreamReplay(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val events = graft.Tables.events(s, dir)
-      .filter(col("event_id") < EventReplayCap)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].collect()
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    val (b1, b2) = events.splitAt(events.length / 2)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val settled = settleWith(s, funnelProgress(input.toDS()).toDF(), OutputMode.Update) { q =>
-      input.addData(b1)
-      q.processAllAvailable()
-      input.addData(b2)
-      q.processAllAvailable()
-    }
-    val per = settled.groupBy(col("user_id")).agg(max(col("step")).as("step"))
-    def stepCount(k: Int, label: String) =
-      per.filter(col("step") >= k)
-        .agg(count(lit(1)).as("n_users"))
-        .select(lit(label).as("step"), col("n_users"))
-    stepCount(1, "1_view")
-      .unionAll(stepCount(2, "2_click"))
-      .unionAll(stepCount(3, "3_purchase"))
+  def funnelStreamReplay(s: SparkSession, dir: String): DataFrame =
+    funnelReport(twoBatchReplay(s, dir, OutputMode.Update)(funnelProgress(_).toDF()))
+
+  /** The nested step report over a settled funnel Update sink of
+    * (user_id, step) rows, in ONE aggregation: per-user max(step),
+    * then the three nested counts (step ≥ k) as `count_if`s of one
+    * global aggregate, unpivoted into one (step, n_users) row per
+    * step — an empty sink still reports three rows of 0. */
+  private[graft] def funnelReport(settled: DataFrame): DataFrame = {
+    val labels = Seq("1_view", "2_click", "3_purchase")
+    settled.groupBy(col("user_id")).agg(max(col("step")).as("step"))
+      .agg(count_if(col("step") >= 1).as("n1"), count_if(col("step") >= 2).as("n2"),
+        count_if(col("step") >= 3).as("n3"))
+      .select(inline(array(labels.zipWithIndex.map { case (label, i) =>
+        struct(lit(label).as("step"), col(s"n${i + 1}").as("n_users"))
+      }: _*)))
   }
 
   /** Attribution horizon for the stream-stream join: a click
@@ -1126,7 +1066,8 @@ object EventStreams {
     val cIn = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
     vIn.addData(events.filter(_.event_type == "view"))
     cIn.addData(events.filter(_.event_type == "click"))
-    settle(s, attributionJoin(vIn.toDS().toDF(), cIn.toDS().toDF()), OutputMode.Append)
+    settle(s, attributionJoin(vIn.toDS().toDF(), cIn.toDS().toDF()), OutputMode.Append,
+      capped = true)
   }
 
   /** #38f Stream-stream LEFT OUTER interval join — the attribution
@@ -1166,8 +1107,8 @@ object EventStreams {
 
   /** #38f driver surface: both sides complete in micro-batch 1, so
     * every match emits exactly once, and the watermark-closing
-    * no-data batch (the settle harness polls for it) evicts and emits
-    * every closable unmatched view. */
+    * no-data batch (`processAllAvailable()` waits for it) evicts and
+    * emits every closable unmatched view. */
   def attributionJoinOuterReplay(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val events = graft.Tables.events(s, dir)
@@ -1181,7 +1122,7 @@ object EventStreams {
     vIn.addData(events.filter(_.event_type == "view"))
     cIn.addData(events.filter(_.event_type == "click"))
     settle(s, attributionJoinOuter(vIn.toDS().toDF(), cIn.toDS().toDF()),
-      OutputMode.Append)
+      OutputMode.Append, capped = true)
   }
 
   /** #38e Stream-STATIC enrichment join — the most common production
@@ -1227,7 +1168,7 @@ object EventStreams {
     runReplay[Event](s, events,
       ds => enrichedNationRollup(ds.toDF(),
         graft.Tables.customer(s, dir), graft.Tables.nation(s, dir)),
-      OutputMode.Complete)
+      OutputMode.Complete, capped = true)
   }
 
   /** Fully-qualified name of Spark's built-in RocksDB state store
@@ -1242,8 +1183,8 @@ object EventStreams {
     * state store provider flipped to RocksDB, restoring the previous
     * provider after. The provider is read once at query START, so a
     * scoped set covers the whole bounded run; queries run
-    * sequentially through Verify/Bench (the same scoping rule as the
-    * settle harness's shuffle-partition override). */
+    * sequentially through Verify/Bench (the same scoping rule as
+    * [[startReplay]]'s state-partition override). */
   private[graft] def withRocksDbState[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val saved = s.conf.getOption(key)
@@ -1591,27 +1532,11 @@ object EventStreams {
     funnelConvReplayWith(s, dir)(funnelConv(_).toDF())
 
   private def funnelConvReplayWith(s: SparkSession, dir: String)(
-      plan: Dataset[Event] => DataFrame): DataFrame = {
-    import s.implicits._
-    val events = graft.Tables.events(s, dir)
-      .filter(col("event_id") < EventReplayCap)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .as[Event].collect()
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    val (b1, b2) = events.splitAt(events.length / 2)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val settled = settleWith(s, plan(input.toDS()), OutputMode.Update) { q =>
-      input.addData(b1)
-      q.processAllAvailable()
-      input.addData(b2)
-      q.processAllAvailable()
-    }
+      plan: Dataset[Event] => DataFrame): DataFrame =
     convFunnelReport(
-      settled.groupBy(col("user_id"), col("attempt_us"))
+      twoBatchReplay(s, dir, OutputMode.Update)(plan)
+        .groupBy(col("user_id"), col("attempt_us"))
         .agg(max(col("step")).as("step")))
-  }
 
   /** #37c'''' with the state store on RocksDB — the same
     * TTL-eviction × SSD-spilled-store composition as

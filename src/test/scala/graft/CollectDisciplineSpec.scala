@@ -14,8 +14,8 @@ import scala.jdk.CollectionConverters._
   * driver boundary.
   *
   * The pinned sites and why each is bounded:
-  *  - EventStreams.scala ×12 — the `EventReplayCap`-bounded
-  *    MemoryStream replay feeds (two settled-sink reads included):
+  *  - EventStreams.scala ×7 — the `EventReplayCap`-bounded
+  *    MemoryStream replay feeds (the one settled-sink read included):
   *    the streaming faces replay a DECLARED capped window of the
   *    batch table through a memory source; the cap is the operator's
   *    spec'd contract, not an accident of SF.
@@ -51,7 +51,7 @@ class CollectDisciplineSpec extends SparkSpecBase {
 
   test("driver .collect() sites are pinned to the audited bounded-relation set") {
     val pinned = Map(
-      "EventStreams.scala" -> 12,
+      "EventStreams.scala" -> 7,
       "Graph.scala" -> 2,
       "Dedup.scala" -> 2,
       "Similarity.scala" -> 1,

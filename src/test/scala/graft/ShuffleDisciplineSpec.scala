@@ -309,11 +309,11 @@ object ShuffleDisciplineSpec {
     "streaming_available_now" -> 0,
     "streaming_dedup" -> 2,
     "streaming_dedup_rocksdb" -> 2,
-    "streaming_funnel" -> 4,
+    "streaming_funnel" -> 2,
     "streaming_funnel_conv" -> 3,
     "streaming_funnel_conv_rocksdb" -> 3,
     "streaming_funnel_conv_tws" -> 3,
-    "streaming_funnel_rocksdb" -> 4,
+    "streaming_funnel_rocksdb" -> 2,
     "streaming_heavy_hitters" -> 1,
     "streaming_ingest_index" -> 0,
     "streaming_ingest_index_near" -> 0,

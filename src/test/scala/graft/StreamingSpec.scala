@@ -637,6 +637,79 @@ class StreamingSpec extends SparkSpecBase {
     assert(got("1_view") > 0)
   }
 
+  /** The funnel report as three filtered aggregations joined by
+    * `unionAll`: the reference the one-aggregation report must equal. */
+  private def funnelUnionReport(settled: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val per = settled.groupBy(col("user_id")).agg(max(col("step")).as("step"))
+    def stepCount(k: Int, label: String) =
+      per.filter(col("step") >= k)
+        .agg(count(lit(1)).as("n_users"))
+        .select(lit(label).as("step"), col("n_users"))
+    stepCount(1, "1_view")
+      .unionAll(stepCount(2, "2_click"))
+      .unionAll(stepCount(3, "3_purchase"))
+  }
+
+  /** The settled funnel replay at sf0.01, whose capped window has
+    * three distinct step counts (at sf0.001 every user reaches step 3,
+    * so a report mixing up its thresholds would still agree). */
+  private def funnelSettled() =
+    EventStreams.twoBatchReplay(spark, "/root/testdata/sf0.01", OutputMode.Update)(
+      EventStreams.funnelProgress(_).toDF())
+
+  test("funnel report: one aggregation equals the three-branch union on the settled replay") {
+    val settled = funnelSettled()
+    val got = EventStreams.funnelReport(settled)
+    val want = funnelUnionReport(settled)
+    assert(got.schema == want.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(rows(got) == rows(want))
+    assert(rows(got).map(_._1) == Seq("1_view", "2_click", "3_purchase"))
+    val counts = rows(got).map(_._2)
+    assert(counts(0) > counts(1) && counts(1) > counts(2) && counts(2) > 0,
+      s"step counts $counts are not strictly nested")
+  }
+
+  test("funnel report: an empty settled relation reports three zero rows, same schema") {
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.Encoders.product[EventStreams.FunnelProgress].schema)
+    val got = EventStreams.funnelReport(empty)
+    val want = funnelUnionReport(empty)
+    assert(got.schema == want.schema)
+    assert(got.schema.fields.map(f => (f.name, f.nullable)).toSeq ==
+      Seq("step" -> false, "n_users" -> false))
+    val rows = got.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(rows == Seq("1_view" -> 0L, "2_click" -> 0L, "3_purchase" -> 0L))
+    assert(rows == want.collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
+  }
+
+  test("replay state partitions: 1 for a capped replay, min(4, slots) for a whole-table one") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(op => seen.add(op.numShufflePartitions.toInt))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    def partitionsOf(query: String): Set[Int] = {
+      seen.clear()
+      SparkEntry.queries(query)(spark, sfDir).collect()
+      org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+      scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSet
+    }
+    spark.streams.addListener(listener)
+    try {
+      assert(partitionsOf("streaming_funnel") == Set(1))
+      val slots = spark.sparkContext.defaultParallelism
+      assert(partitionsOf("streaming_windowed") == Set(math.min(4, slots)))
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("attribution replay surface equals the batch window face on the capped corpus") {
     val got = EventStreams.attributionStreamReplay(spark, sfDir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap

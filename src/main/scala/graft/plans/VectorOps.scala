@@ -143,47 +143,48 @@ object VectorOps {
     * md5(mh[4b] || "|" || … || mh[4b+3]) in lowercase hex. Duplicate
     * shingles can't change a minimum, so the explicit distinct is
     * unnecessary. Constants mirror graft.operators.Dedup:
-    * ShingleK=8, NumHashes=16, NumBands=4, NumSalts=4. */
+    * ShingleK=8, NumHashes=16, NumBands=4, NumSalts=4.
+    *
+    * The salted shingle digests run on [[Md5Lanes]] (RFC 1321): a
+    * salt plus at most 32 bytes (8 chars of at most 4 UTF-8 bytes) is
+    * one MD5 block, so 64 shingles at a time become 256 independent
+    * lanes. Each MD5 step is one loop over the lanes, which the JIT
+    * compiles to SIMD code, instead of one serial `MessageDigest` chain
+    * per digest. The steps are split into one method per MD5 round so
+    * that no method nears HotSpot's 8,000-byte `HugeMethodLimit`, past
+    * which a method is never JIT-compiled (KernelShapeSpec pins it).
+    * The four band digests stay on `MessageDigest`. */
   def lshBandSigs(text: UTF8String): ArrayData = {
     val bytes = text.getBytes
-    val n = bytes.length
     val nChars = text.numChars()
-    // Byte offset of each character start (UTF-8 aware so shingle
-    // boundaries match Spark/DuckDB character semantics).
-    val offs = new Array[Int](nChars + 1)
-    var i = 0
-    var c = 0
-    while (i < n) {
-      offs(c) = i; c += 1
-      i += UTF8String.numBytesForFirstByte(bytes(i))
-    }
-    offs(nChars) = n
+    val offs = charOffsets(bytes, nChars)
     val numSh = math.max(1, nChars - 7)
-    val md = md5Local.get()
+    val lanes = new Md5Lanes(lshSalts, math.min(numSh, Md5Lanes.MaxBatch))
     val minima = new Array[Int](16)
     java.util.Arrays.fill(minima, -1) // unsigned max
     var sh = 0
     while (sh < numSh) {
       val from = offs(sh)
-      val to = offs(math.min(sh + 8, nChars))
-      var a = 0
-      while (a < 4) {
-        md.reset()
-        md.update(lshSalts(a))
-        md.update(bytes, from, to - from)
-        val d = md.digest()
-        var ci = 0
-        while (ci < 4) {
-          val v = ((d(ci * 4) & 0xff) << 24) | ((d(ci * 4 + 1) & 0xff) << 16) |
-            ((d(ci * 4 + 2) & 0xff) << 8) | (d(ci * 4 + 3) & 0xff)
-          val j = a * 4 + ci
-          if (java.lang.Integer.compareUnsigned(v, minima(j)) < 0) minima(j) = v
-          ci += 1
-        }
-        a += 1
-      }
+      lanes.add(bytes, from, offs(math.min(sh + 8, nChars)) - from)
       sh += 1
+      if (lanes.isFull || sh == numSh) {
+        lanes.run()
+        // Lane 4m + a holds salt a's digest of the batch's m-th shingle.
+        var l = 0
+        while (l < lanes.queued) {
+          val j = (l & 3) << 2
+          var ci = 0
+          while (ci < 4) {
+            val v = lanes.word(l, ci)
+            if (java.lang.Integer.compareUnsigned(v, minima(j + ci)) < 0) minima(j + ci) = v
+            ci += 1
+          }
+          l += 1
+        }
+        lanes.clear()
+      }
     }
+    val md = md5Local.get()
     val out = new Array[Any](4)
     val sb = new java.lang.StringBuilder(35)
     var b = 0
@@ -199,14 +200,7 @@ object VectorOps {
       }
       md.reset()
       val sig = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val hex = new Array[Char](32)
-      var t = 0
-      while (t < 16) {
-        hex(t * 2) = hexDigits((sig(t) >> 4) & 0xf)
-        hex(t * 2 + 1) = hexDigits(sig(t) & 0xf)
-        t += 1
-      }
-      out(b) = UTF8String.fromString(new String(hex))
+      out(b) = UTF8String.fromString(toHex(sig))
       b += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)

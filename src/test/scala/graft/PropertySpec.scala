@@ -94,10 +94,16 @@ class PropertySpec extends AnyFunSuite {
     (0 until n).map(i => new String(cps, i, math.min(k, cps.length - i).max(0)))
   }
 
+  /** Characters of 2, 2, 3, 3 and 4 UTF-8 bytes (U+1F600 is a
+    * surrogate pair in UTF-16): an 8-char shingle of them reaches the
+    * 32 bytes that fill MD5 message words 7 and 8 after a 2-byte salt. */
+  private val wideChars = Seq("é", "ß", "中", "€", "\uD83D\uDE00")
+
   private val textGen: Gen[String] = Gen.frequency(
     8 -> Gen.listOf(Gen.frequency(
-      10 -> Gen.alphaNumChar, 3 -> Gen.const(' '), 1 -> Gen.oneOf('é', 'ß', '中', '€'))
+      10 -> Gen.alphaNumChar.map(_.toString), 3 -> Gen.const(" "), 1 -> Gen.oneOf(wideChars))
     ).map(_.mkString),
+    2 -> Gen.listOf(Gen.oneOf(wideChars)).map(_.mkString),
     1 -> Gen.const(""))
 
   test("repetitionStats kernel equals the naive count-map formulation") {
@@ -121,8 +127,62 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  private val lshSalts = (0 until 4).map(a => s"$a|".getBytes("UTF-8")).toArray
+
+  /** Lane `lane`'s digest as lowercase hex, after `lanes.run()`. */
+  private def laneHex(lanes: graft.plans.Md5Lanes, lane: Int): String =
+    (0 until 4).map(i => f"${lanes.word(lane, i)}%08x").mkString
+
+  test("Md5Lanes: every lane equals MessageDigest MD5 at every one-block body length") {
+    // 8 chars of at most 4 UTF-8 bytes: shingles are 0..32 bytes; the
+    // kernel takes any body that fits one block with the 2-byte salt.
+    // One batch holds a body of each length 0..53 (54 of the 64
+    // messages), in random order and at random offsets.
+    val lanes = new graft.plans.Md5Lanes(lshSalts, graft.plans.Md5Lanes.MaxBatch)
+    def message(n: Int) = for {
+      pad <- Gen.choose(0, 5)
+      bs <- Gen.listOfN(n, org.scalacheck.Arbitrary.arbitrary[Byte])
+    } yield (pad, Array.fill[Byte](pad)(7) ++ bs)
+    val batch = for {
+      msgs <- Gen.sequence[Seq[(Int, Array[Byte])], (Int, Array[Byte])]((0 to 53).map(message))
+      seed <- Gen.long
+    } yield new scala.util.Random(seed).shuffle(msgs)
+    check(Prop.forAll(batch) { msgs =>
+      lanes.clear()
+      msgs.foreach { case (pad, buf) => lanes.add(buf, pad, buf.length - pad) }
+      lanes.run()
+      msgs.zipWithIndex.forall { case ((pad, buf), m) =>
+        (0 until 4).forall { k =>
+          md.reset()
+          md.update(lshSalts(k))
+          md.update(buf, pad, buf.length - pad)
+          laneHex(lanes, 4 * m + k) == md.digest().map(b => f"$b%02x").mkString
+        }
+      }
+    })
+    intercept[IllegalArgumentException](lanes.add(new Array[Byte](54), 0, 54))
+  }
+
+  test("Md5Lanes: unsalted lanes give the RFC 1321 A.5 digests that fit one block") {
+    val lanes = new graft.plans.Md5Lanes(Array.fill(4)(Array.emptyByteArray), 5)
+    val vectors = Seq(
+      "" -> "d41d8cd98f00b204e9800998ecf8427e",
+      "a" -> "0cc175b9c0f1b6a831c399e269772661",
+      "abc" -> "900150983cd24fb0d6963f7d28e17f72",
+      "message digest" -> "f96b697d7cb7938d525a2f31aaf161d0",
+      "abcdefghijklmnopqrstuvwxyz" -> "c3fcd3d76192e4007dfb496cca67e13b")
+    vectors.foreach { case (msg, _) =>
+      lanes.add(msg.getBytes("US-ASCII"), 0, msg.length)
+    }
+    lanes.run()
+    for (((msg, want), m) <- vectors.zipWithIndex; k <- 0 until 4)
+      assert(laneHex(lanes, 4 * m + k) == want, s"lane $k of md5(\"$msg\")")
+  }
+
   test("lshBandSigs kernel equals the salted-chunk-minima + band-md5 formula") {
-    check(Prop.forAll(textGen) { t =>
+    // Joined texts run past one 64-shingle lane batch.
+    val texts = Gen.frequency(3 -> textGen, 1 -> Gen.listOfN(3, textGen).map(_.mkString))
+    check(Prop.forAll(texts) { t =>
       val sigs = graft.plans.VectorOps.lshBandSigs(
         org.apache.spark.unsafe.types.UTF8String.fromString(t))
       val sh = charShingles(t, 8)

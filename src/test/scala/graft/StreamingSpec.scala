@@ -615,12 +615,28 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
+  /** The funnel checks run at sf0.01, whose capped window has three
+    * distinct step counts (111/64/35). At sf0.001 every user reaches
+    * step 3 (15/15/15), so a report that mixed up its step thresholds
+    * would still agree with any reference. */
+  private val funnelSfDir = "/root/testdata/sf0.01"
+
+  /** A funnel report has its three steps in order with three distinct,
+    * strictly nested counts, so the fixture tells the thresholds apart. */
+  private def assertNestedSteps(rows: Seq[(String, Long)]): Unit = {
+    assert(rows.map(_._1) == Seq("1_view", "2_click", "3_purchase"))
+    val counts = rows.map(_._2)
+    assert(counts(0) > counts(1) && counts(1) > counts(2) && counts(2) > 0,
+      s"step counts $counts are not strictly nested")
+  }
+
   test("funnel replay surface equals the batch step chain on the capped corpus") {
     import org.apache.spark.sql.functions._
-    val got = EventStreams.funnelStreamReplay(spark, sfDir).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = EventStreams.funnelStreamReplay(spark, funnelSfDir).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
+    assertNestedSteps(got)
     val cap = EventStreams.EventReplayCap
-    val ev = Tables.events(spark, sfDir).filter(col("event_id") < cap)
+    val ev = Tables.events(spark, funnelSfDir).filter(col("event_id") < cap)
       .select(col("user_id"), col("event_type"), col("ts"))
     val s1 = ev.filter(col("event_type") === "view")
       .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
@@ -630,11 +646,9 @@ class StreamingSpec extends SparkSpecBase {
     val s3 = ev.filter(col("event_type") === "purchase")
       .join(s2, "user_id").filter(col("ts") > col("t2"))
       .groupBy(col("user_id")).agg(min(col("ts")).as("t3"))
-    val expect = Map(
+    val expect = Seq(
       "1_view" -> s1.count(), "2_click" -> s2.count(), "3_purchase" -> s3.count())
     assert(got == expect, s"got $got\nexp $expect")
-    assert(got("1_view") >= got("2_click") && got("2_click") >= got("3_purchase"))
-    assert(got("1_view") > 0)
   }
 
   /** The funnel report as three filtered aggregations joined by
@@ -651,11 +665,8 @@ class StreamingSpec extends SparkSpecBase {
       .unionAll(stepCount(3, "3_purchase"))
   }
 
-  /** The settled funnel replay at sf0.01, whose capped window has
-    * three distinct step counts (at sf0.001 every user reaches step 3,
-    * so a report mixing up its thresholds would still agree). */
   private def funnelSettled() =
-    EventStreams.twoBatchReplay(spark, "/root/testdata/sf0.01", OutputMode.Update)(
+    EventStreams.twoBatchReplay(spark, funnelSfDir, OutputMode.Update)(
       EventStreams.funnelProgress(_).toDF())
 
   test("funnel report: one aggregation equals the three-branch union on the settled replay") {
@@ -666,10 +677,7 @@ class StreamingSpec extends SparkSpecBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(rows(got) == rows(want))
-    assert(rows(got).map(_._1) == Seq("1_view", "2_click", "3_purchase"))
-    val counts = rows(got).map(_._2)
-    assert(counts(0) > counts(1) && counts(1) > counts(2) && counts(2) > 0,
-      s"step counts $counts are not strictly nested")
+    assertNestedSteps(rows(got))
   }
 
   test("funnel report: an empty settled relation reports three zero rows, same schema") {
@@ -983,15 +991,13 @@ class StreamingSpec extends SparkSpecBase {
   test("streaming_funnel_rocksdb: output is provider-independent (equals the default-provider twin)") {
     // Same contract one state shape up: the funnel's three-timestamp
     // fMGWS state (set-only, cross-batch) must fold identically on
-    // RocksDB — sorted both ways because each face unions its three
-    // step counts independently.
+    // RocksDB.
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
-    val rocks = rows(EventStreams.funnelStreamReplayRocksDb(spark, sfDir))
-    val hdfs  = rows(EventStreams.funnelStreamReplay(spark, sfDir))
+    val rocks = rows(EventStreams.funnelStreamReplayRocksDb(spark, funnelSfDir))
+    val hdfs  = rows(EventStreams.funnelStreamReplay(spark, funnelSfDir))
     assert(rocks == hdfs)
-    assert(rocks.map(_._1) == Seq("1_view", "2_click", "3_purchase"))
-    assert(rocks.head._2 > 0)
+    assertNestedSteps(rocks)
   }
 
   test("streaming_attribution_ttl_rocksdb: output is provider-independent (equals the default-provider twin)") {

@@ -619,7 +619,7 @@ class StreamingSpec extends SparkSpecBase {
     * distinct step counts (111/64/35). At sf0.001 every user reaches
     * step 3 (15/15/15), so a report that mixed up its step thresholds
     * would still agree with any reference. */
-  private val funnelSfDir = "/root/testdata/sf0.01"
+  private val funnelSfDir = s"${new java.io.File(sfDir).getParent}/sf0.01"
 
   /** A funnel report has its three steps in order with three distinct,
     * strictly nested counts, so the fixture tells the thresholds apart. */

@@ -33,9 +33,14 @@ object SparkEntry {
       build: (SparkSession, String) => DataFrame,
       oracle: Derived => String)
 
-  /** Builder of every registered query, by name. */
+  /** Builder of every registered query, by name. Each build first
+    * installs graft on its session ([[graft.plans.GraftFunctions.install]],
+    * idempotent), so a session graft did not build runs the same plans. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.iterator.map(q => q.name -> q.build).toMap
+    defs.iterator.map(q => q.name -> { (s: SparkSession, dir: String) =>
+      graft.plans.GraftFunctions.install(s)
+      q.build(s, dir)
+    }).toMap
 
   /** DuckDB mirror of every registered query for the dir being
     * verified; the session/dir pair exists only to resolve

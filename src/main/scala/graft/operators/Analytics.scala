@@ -4,7 +4,6 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.decimal_sum
 
 /** Multi-stage analytics (SURVEY §2.3): what took a chain of
   * MapReduce jobs in the reference is one Catalyst plan here —
@@ -48,8 +47,8 @@ object Analytics {
       .agg(
         round(sum(col("l_quantity")), 2).as("sum_qty"),
         round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).cast("double").as("sum_disc_price"),
-        decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax")), 18, 6).cast("double").as("sum_charge"),
+        sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).cast("double").as("sum_disc_price"),
+        sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))).cast("decimal(18,6)")).cast("double").as("sum_charge"),
         round(avg(col("l_quantity")), 4).as("avg_qty"),
         round(avg(col("l_extendedprice")), 4).as("avg_price"),
         round(avg(col("l_discount")), 4).as("avg_disc"),
@@ -65,7 +64,7 @@ object Analytics {
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).cast("double").as("revenue"))
+      .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).cast("double").as("revenue"))
   }
 
   /** TPC-H Q5-class: revenue by nation — every dim broadcast, one
@@ -79,7 +78,7 @@ object Analytics {
       .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
-      .agg(decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).cast("double").as("revenue"),
+      .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
 
   /** TPC-H Q4-class: order-priority checking — a fact-to-fact EXISTS
@@ -143,7 +142,7 @@ object Analytics {
   def tpchQ22(s: SparkSession, dir: String): DataFrame = {
     val cust = Tables.customer(s, dir)
     val thr = cust.filter(col("c_acctbal") > 0.0)
-      .agg((decimal_sum(col("c_acctbal"), 18, 2).cast("double") /
+      .agg((sum(col("c_acctbal").cast("decimal(18,2)")).cast("double") /
         count(lit(1))).as("thr"))
     val recent = Tables.orders(s, dir)
       .filter(col("o_orderdate") >= lit(Q22Cutoff).cast("timestamp"))
@@ -195,10 +194,10 @@ object Analytics {
       .groupBy(date_trunc("month", col("l_shipdate")).as("ship_month"))
       .agg(
         (lit(100.0) *
-          decimal_sum(when(col("p_type") === "PROMO",
+          sum(when(col("p_type") === "PROMO",
               col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .otherwise(lit(0.0)), 18, 4).cast("double") /
-          decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4)
+            .otherwise(lit(0.0)).cast("decimal(18,4)")).cast("double") /
+          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)"))
             .cast("double")).as("promo_revenue_pct"),
         count(lit(1)).as("n_items"))
 
@@ -245,7 +244,7 @@ object Analytics {
         (col("p_brand") === "Brand#33" && col("p_size").between(20, 30) &&
           col("l_quantity").between(20, 30)))
       .agg(
-        decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).cast("double").as("revenue"),
+        sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
 
   /** TPC-H Q6: forecast revenue — pure scan+filter+agg; the filters
@@ -257,7 +256,7 @@ object Analytics {
         col("l_shipdate") < lit("1995-01-01").cast("timestamp") &&
         col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
         col("l_quantity") < 24)
-      .agg(decimal_sum(col("l_extendedprice") * col("l_discount"), 18, 4).cast("double").as("revenue"),
+      .agg(sum((col("l_extendedprice") * col("l_discount")).cast("decimal(18,4)")).cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
 
   /** TPC-H Q7-class (volume shipping between two nations): the
@@ -295,7 +294,7 @@ object Analytics {
       .filter(col("supp_nation") =!= col("cust_nation"))
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).as("l_year"))
-      .agg(decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).cast("double").as("revenue"),
+      .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
   }
 
@@ -337,9 +336,9 @@ object Analytics {
       .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
       .groupBy(year(col("o_orderdate")).as("o_year"))
       .agg(
-        (decimal_sum(when(col("supp_nation") === "NATION_5", volume)
-            .otherwise(lit(0.0)), 18, 4).cast("double") /
-          decimal_sum(volume, 18, 4).cast("double")).as("mkt_share"),
+        (sum(when(col("supp_nation") === "NATION_5", volume)
+            .otherwise(lit(0.0)).cast("decimal(18,4)")).cast("double") /
+          sum(volume.cast("decimal(18,4)")).cast("double")).as("mkt_share"),
         count(lit(1)).as("n_items"))
   }
 
@@ -362,7 +361,7 @@ object Analytics {
           .select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
-      .agg(decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).as("rev_dec"),
+      .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).as("rev_dec"),
         count(lit(1)).as("n_items"))
     rev
       .withColumn("rn", row_number().over(
@@ -390,7 +389,7 @@ object Analytics {
   def tpchQ11(s: SparkSession, dir: String): DataFrame = {
     val value = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey"))
-      .agg(decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).as("value_dec"))
+      .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).as("value_dec"))
     val tot = value.agg(sum(col("value_dec")).cast("decimal(28,4)").as("tot"),
       count(lit(1)).as("np"))
     value.crossJoin(broadcast(tot))
@@ -413,7 +412,7 @@ object Analytics {
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
       .groupBy(col("l_suppkey"))
-      .agg(decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).as("total_rev_dec"))
+      .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).as("total_rev_dec"))
     val mx = rev.agg(max(col("total_rev_dec")).as("mx"))
     rev.crossJoin(broadcast(mx))
       .filter(col("total_rev_dec") === col("mx"))
@@ -442,7 +441,7 @@ object Analytics {
         col("l_partkey") === col("p_partkey"))
       .join(partAvg, "l_partkey")
       .filter(col("l_quantity") * lit(5) * col("n_li") < col("sum_qty"))
-      .agg((decimal_sum(col("l_extendedprice"), 18, 2).cast("double") / lit(7.0))
+      .agg((sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double") / lit(7.0))
           .as("avg_yearly"),
         count(lit(1)).as("n_items"))
   }
@@ -593,7 +592,7 @@ object Analytics {
     withCost
       .groupBy(col("n_name").as("nation"), col("o_year"))
       .agg(
-        decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).as("rev_dec"),
+        sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).as("rev_dec"),
         // floor-then-cast on BOTH engines: Spark's cast("long")
         // truncates while DuckDB's CAST(... AS BIGINT) rounds —
         // benign on integral generated quantities, silent divergence
@@ -927,7 +926,7 @@ object Analytics {
       .groupBy(col("user_id"))
       .agg(max(unix_millis(col("ts"))).as("recency_ms"),
         count(lit(1)).as("frequency"),
-        decimal_sum(col("value"), 18, 6).cast("double").as("monetary"))
+        sum(col("value").cast("decimal(18,6)")).cast("double").as("monetary"))
     val cutCols = RfmCuts.zipWithIndex.map { case (p, i) =>
       round(expr(s"percentile(recency_ms, $p)"), 4).as(s"r$i") } ++
       RfmCuts.zipWithIndex.map { case (p, i) =>
@@ -1254,7 +1253,7 @@ object Analytics {
       .agg(count(lit(1)).as("n"),
         sum(col("x").cast("long")).as("sx"),
         sum((col("x") * col("x")).cast("long")).as("sxx"),
-        decimal_sum(col("value"), 18, 6).as("sy"),
+        sum(col("value").cast("decimal(18,6)")).as("sy"),
         sum((col("x") * col("y")).cast("decimal(28,10)")).as("sxy"),
         sum((col("y") * col("y")).cast("decimal(28,10)")).as("syy"))
     val n = col("n").cast("double"); val sx = col("sx").cast("double")
@@ -1298,7 +1297,7 @@ object Analytics {
       .agg(count(lit(1)).as("n"),
         count(when(col("value") < col("p_lo"), 1)).as("n_clipped_lo"),
         count(when(col("value") > col("p_hi"), 1)).as("n_clipped_hi"),
-        round(decimal_sum(col("clipped"), 18, 6).cast("double"), 2)
+        round(sum(col("clipped").cast("decimal(18,6)")).cast("double"), 2)
           .as("sum_clipped"))
   }
 
@@ -1351,8 +1350,8 @@ object Analytics {
       .agg(
         count(when(col("arm") === 0, 1)).as("n_a"),
         count(when(col("arm") === 1, 1)).as("n_b"),
-        decimal_sum(when(col("arm") === 0, col("value")), 18, 6).as("sy_a"),
-        decimal_sum(when(col("arm") === 1, col("value")), 18, 6).as("sy_b"),
+        sum(when(col("arm") === 0, col("value")).cast("decimal(18,6)")).as("sy_a"),
+        sum(when(col("arm") === 1, col("value")).cast("decimal(18,6)")).as("sy_b"),
         sum(when(col("arm") === 0, (col("y") * col("y")).cast("decimal(28,10)")))
           .as("syy_a"),
         sum(when(col("arm") === 1, (col("y") * col("y")).cast("decimal(28,10)")))

@@ -6,7 +6,6 @@ import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.decimal_sum
 
 /** Learned-model operators — the classic MapReduce ML workloads
   * (reference analogue: the Mahout-era count-based trainers that ran
@@ -519,15 +518,19 @@ object Learn {
   private[graft] def alsRatingsDir(s: SparkSession, dir: String): String =
     Dedup.dirMemo(alsDirs, Dedup.cacheKey(s, "alsrdir", dir)) {
       val out = graft.sources.FileRoundTrips.freshScratch("alsr", dir)
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("cust"), col("l_suppkey").as("item"))
-        .agg(decimal_sum(col("l_quantity"), 18, 2).cast("double").as("r"))
-        .write.mode("overwrite").parquet(out)
+      alsRatingPairs(s, dir).write.mode("overwrite").parquet(out)
       out
     }
+
+  /** The rating relation [[alsRatingsDir]] writes: each trade pair's
+    * exact quantity total. */
+  private[graft] def alsRatingPairs(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity"))
+      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_custkey").as("cust"), col("l_suppkey").as("item"))
+      .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("r"))
 
   /** The rating relation clustered by one alternation's join key,
     * persisted per session (house cache rule: each half-round of its

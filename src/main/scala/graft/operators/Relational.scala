@@ -4,7 +4,6 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.decimal_sum
 
 /** Spark-first re-expressions of the Hadoop MapReduce core dataflow
   * (SURVEY §2.1). Each method is one `SparkEntry.queries` entry.
@@ -243,7 +242,7 @@ object Relational {
       .join(dim, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_items"),
-        decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).cast("double").as("revenue"))
+        sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).cast("double").as("revenue"))
   }
 
   /** #9 ChainMapper/ChainReducer: map → map → reduce → map, fused by
@@ -253,7 +252,7 @@ object Relational {
       .filter(col("l_discount") > 0.02)                           // map 1
       .withColumn("net", col("l_extendedprice") * (lit(1.0) - col("l_discount"))) // map 2
       .groupBy(date_trunc("month", col("l_shipdate")).as("ship_month"))  // reduce
-      .agg(decimal_sum(col("net"), 18, 4).cast("double").as("month_net"))
+      .agg(sum(col("net").cast("decimal(18,4)")).cast("double").as("month_net"))
       .withColumn("month_net_k", round(col("month_net") / 1000.0, 2))    // map 3
       .drop("month_net")
 

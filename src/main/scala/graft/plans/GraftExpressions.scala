@@ -1,16 +1,17 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.QueryContext
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate, Sum}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Add, And, AttributeReference, BinaryExpression, Cast, CheckOverflowInSum, EvalMode, Expression, ExpressionInfo, If, IsNull, Literal, NumericEvalContext, SupportQueryContext, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.expressions.{Add, And, AttributeReference, BinaryExpression, CaseWhen, Cast, CheckOverflowInSum, EvalMode, Expression, If, IsNull, Literal, NumericEvalContext, SupportQueryContext, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.{CurrentOrigin, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.TreePattern.AGGREGATE_EXPRESSION
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, Decimal, DecimalType, DoubleType, LongType, StringType, StructField, StructType}
 
 /** Custom Catalyst expressions for the vector/similarity operators the
@@ -346,11 +347,12 @@ case class HiLoDecimal(hi: Expression, lo: Expression, dataType: DecimalType)
     copy(hi = newLeft, lo = newRight)
 }
 
-/** `decimal_sum(x, p, s)`: exactly `sum(CAST(x AS DECIMAL(p, s)))` for a
-  * DOUBLE `x` and p ≤ 18 — the same DECIMAL(p+10, s) type and value,
-  * null for empty or all-null input, the same null-or-error for a row
-  * the cast rejects (NaN, ±Inf, out of range) — computed on unscaled
+/** `DecimalSum(x, p, s, ansi)`: exactly `sum(CAST(x AS DECIMAL(p, s)))`
+  * for a DOUBLE `x` and p ≤ 18 — the same DECIMAL(p+10, s) type and
+  * value, null for empty or all-null input, the same null-or-error for a
+  * row the cast rejects (NaN, ±Inf, out of range) — computed on unscaled
   * longs inside whole-stage codegen instead of a `BigDecimal` per row.
+  * [[DecimalSums]] puts it in place of that `sum`.
   *
   * Per row, [[UnscaledDecimal]] gives the cast's unscaled long (Spark's
   * `Cast` is its fallback). The buffer holds the running sum as
@@ -360,8 +362,7 @@ case class HiLoDecimal(hi: Expression, lo: Expression, dataType: DecimalType)
   * it to Spark's `CheckOverflowInSum`; a sum past p+10 digits reaches it
   * as null, as Spark's overflowed buffer does in a grouped aggregation,
   * so non-ANSI gives null and ANSI throws Spark's sum-overflow error.
-  * `ansi` is the session's `spark.sql.ansi.enabled` when the call is
-  * built, as Spark's `Sum` captures its eval mode. */
+  * `ansi` is the eval mode of the `Sum` it replaces. */
 case class DecimalSum(child: Expression, precision: Int, scale: Int, ansi: Boolean)
     extends DeclarativeAggregate with UnaryLike[Expression] with SupportQueryContext {
 
@@ -373,11 +374,6 @@ case class DecimalSum(child: Expression, precision: Int, scale: Int, ansi: Boole
   override def nullable: Boolean = true
   override def prettyName: String = "decimal_sum"
   override def defaultResult: Option[Literal] = Some(Literal.create(null, dataType))
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"decimal_sum needs a DOUBLE input, got ${child.dataType.sql}")
 
   override def initQueryContext(): Option[QueryContext] =
     if (ansi) Some(origin.context) else None
@@ -415,18 +411,68 @@ case class DecimalSum(child: Expression, precision: Int, scale: Int, ansi: Boole
     copy(child = newChild)
 }
 
-/** Registration + Column-API entry points.
+/** Sums an exact narrow decimal of a DOUBLE on unscaled longs: rewrites
+  * a non-distinct LEGACY or ANSI `sum(CAST(x AS DECIMAL(p ≤ 18, s)))`
+  * whose cast has the sum's mode into [[DecimalSum]] (same type, value,
+  * nulls and errors), keeping the `Sum`'s origin for the ANSI query
+  * context. The cast must sit inside the sum: one projected in an earlier
+  * step reaches the `Sum` as a column. A p ≤ 8 sum never gets here, as
+  * Spark's `DecimalAggregates` has made it a long sum already.
   *
-  * [[GraftFunctions.register]] adds the expressions to the session's
-  * FunctionRegistry (idempotent); every Column wrapper calls it on the
-  * active session first, so only SQL text needs an explicit call.
-  * [[GraftSessionExtensions]] is the `spark.sql.extensions`-config
-  * path for cluster deployments.
+  * The rule runs after operator optimization, where
+  * `PushFoldableIntoBranches` has moved a cast of a conditional into its
+  * branches: `CAST(CASE WHEN c THEN x ELSE 0.0 END AS DECIMAL(18,4))`
+  * arrives as `CASE WHEN c THEN CAST(x …) ELSE 0.0000BD END`. So an `If`
+  * or `CaseWhen` is rewritten when each value is that cast of a DOUBLE or
+  * a decimal literal a DOUBLE casts back to exactly (0 and null at
+  * today's sites), and [[DecimalSum]] sums the conditional uncast. */
+object DecimalSums extends Rule[LogicalPlan] {
+
+  def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformAllExpressionsWithPruning(_.containsPattern(AGGREGATE_EXPRESSION)) {
+      case ae @ AggregateExpression(
+          sum @ Sum(child @ (_: Cast | _: If | _: CaseWhen), ctx), _, false, _, _) =>
+        (child.dataType, ctx.evalMode) match {
+          case (dt: DecimalType, mode @ (EvalMode.LEGACY | EvalMode.ANSI)) if dt.precision <= 18 =>
+            uncast(child, dt, mode).fold(ae)(x => ae.copy(aggregateFunction =
+              CurrentOrigin.withOrigin(sum.origin)(
+                DecimalSum(x, dt.precision, dt.scale, mode == EvalMode.ANSI))))
+          case _ => ae
+        }
+    }
+
+  /** The DOUBLE expression whose cast to `dt` under `mode` is `e`. */
+  private def uncast(e: Expression, dt: DecimalType, mode: EvalMode.Value): Option[Expression] =
+    e match {
+      case Cast(x, `dt`, _, `mode`) if x.dataType == DoubleType => Some(x)
+      case Literal(null, `dt`) => Some(Literal(null, DoubleType))
+      case Literal(d: Decimal, `dt`)
+          if Cast(Literal(d.toDouble), dt, None, EvalMode.LEGACY).eval() == d =>
+        Some(Literal(d.toDouble))
+      case If(c, t, f) =>
+        for (a <- uncast(t, dt, mode); b <- uncast(f, dt, mode)) yield If(c, a, b)
+      case CaseWhen(branches, elseValue) =>
+        val values = branches.map(b => uncast(b._2, dt, mode))
+        val otherwise = elseValue.map(uncast(_, dt, mode))
+        if (values.forall(_.isDefined) && otherwise.forall(_.isDefined))
+          Some(CaseWhen(branches.map(_._1).zip(values.flatten), otherwise.flatten))
+        else None
+      case _ => None
+    }
+}
+
+/** Session install + Column-API entry points.
+  *
+  * [[GraftFunctions.install]] registers the kernels and adds
+  * [[DecimalSums]] to the session's optimizer; `graft.Session.local`
+  * and `SparkEntry.queries` call it, so Column wrappers and SQL text
+  * resolve on any session a query is built on. An exact narrow decimal
+  * sum is written as Spark's `sum(x.cast("decimal(p,s)"))`; the rule
+  * sums it on longs.
   */
 object GraftFunctions {
 
-  /** bands/planes (and decimal_sum's precision/scale) shape the
-    * kernel, so they must be integer LITERALS
+  /** bands/planes shape the kernel, so they must be integer LITERALS
     * at plan time. Raw `eval().asInstanceOf[Int]` broke on BIGINT
     * literals (`1::BIGINT` → ClassCastException) and threw an
     * inscrutable NPE for non-foldable inputs — match any integral
@@ -462,108 +508,79 @@ object GraftFunctions {
       s"bpe_segment: merges must be a string-array literal, got ${other.sql}")
   }
 
-  /** Every SQL-visible kernel: name, expression class (for the
-    * registry's ExpressionInfo) and builder. [[register]] and
-    * [[GraftSessionExtensions]] both read this one list. */
-  private[graft] val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("cosine_sim", classOf[CosineSimilarity], es => CosineSimilarity(es(0), es(1))),
-    ("cosine_sim_d", classOf[CosineSimilarityD], es => CosineSimilarityD(es(0), es(1))),
-    ("dot_d", classOf[DotProductD], es => DotProductD(es(0), es(1))),
-    ("simhash60", classOf[SimHash60], es => SimHash60(es.head)),
-    ("srp_band_sigs", classOf[SrpBandSigs], es => SrpBandSigs(es.head,
+  /** Every SQL-visible kernel: name and builder. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", es => CosineSimilarity(es(0), es(1))),
+    ("cosine_sim_d", es => CosineSimilarityD(es(0), es(1))),
+    ("dot_d", es => DotProductD(es(0), es(1))),
+    ("simhash60", es => SimHash60(es.head)),
+    ("srp_band_sigs", es => SrpBandSigs(es.head,
       intLitArg(es(1), "srp_band_sigs", "bands"), intLitArg(es(2), "srp_band_sigs", "planes"))),
-    ("lsh_band_sigs", classOf[LshBandSigs], es => LshBandSigs(es.head)),
-    ("bpe_segment", classOf[BpeSegment], es => BpeSegment(es.head, strArrayLitArg(es(1)))),
-    ("repetition_stats", classOf[RepetitionStats], es => RepetitionStats(es.head)),
-    ("fp_minmax", classOf[FpMinMax], es => FpMinMax(es.head)),
-    ("decimal_sum", classOf[DecimalSum], es => decimalSum(es(0),
-      intLitArg(es(1), "decimal_sum", "precision"), intLitArg(es(2), "decimal_sum", "scale"))),
+    ("lsh_band_sigs", es => LshBandSigs(es.head)),
+    ("bpe_segment", es => BpeSegment(es.head, strArrayLitArg(es(1)))),
+    ("repetition_stats", es => RepetitionStats(es.head)),
+    ("fp_minmax", es => FpMinMax(es.head)),
     // Spark's own runtime-filter bloom expressions (used internally
     // by InjectRuntimeFilter but not registered as SQL functions) —
     // surfaced for the explicit semi-join prune tier
     // (Curation.decontaminateBloom). Input must be xxhash64(col).
-    ("bloom_filter_agg",
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate], es =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          es(0), es(1), es(2))),
-    ("bloom_might_contain",
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain], es =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
+    ("bloom_filter_agg", es =>
+      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+        es(0), es(1), es(2))),
+    ("bloom_might_contain", es =>
+      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
 
-  /** A [[DecimalSum]] under the session's current ANSI mode. */
-  private def decimalSum(x: Expression, precision: Int, scale: Int): DecimalSum =
-    DecimalSum(x, precision, scale, SQLConf.get.ansiEnabled)
-
-  /** Idempotent per session: a builder the registry already holds
-    * (the same function object) is skipped, so repeat calls neither
-    * rewrite the registry nor log "replaced a previously registered
-    * function". */
-  def register(s: SparkSession): Unit = {
-    val registry = org.apache.spark.sql.classic.ClassicConversions
-      .castToImpl(s).sessionState.functionRegistry
-    builders.foreach { case (name, _, b) =>
+  /** Registers the kernels and adds [[DecimalSums]] to the session's
+    * extra optimizations. Idempotent per session: a builder the registry
+    * already holds (the same function object) is skipped, so repeat calls
+    * neither rewrite the registry nor log "replaced a previously
+    * registered function", and the rule is added once. */
+  def install(s: SparkSession): Unit = {
+    val session = org.apache.spark.sql.classic.ClassicConversions.castToImpl(s)
+    val registry = session.sessionState.functionRegistry
+    builders.foreach { case (name, b) =>
       if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).contains(b))
         registry.createOrReplaceTempFunction(name, b, "built-in")
     }
+    val experimental = session.experimental
+    experimental.synchronized {
+      if (!experimental.extraOptimizations.contains(DecimalSums))
+        experimental.extraOptimizations = experimental.extraOptimizations :+ DecimalSums
+    }
   }
 
-  /** Calls kernel `name` after registering the kernels on the active
-    * session (a no-op once done), so no call site needs a
-    * [[register]] call of its own. */
-  private def call(name: String, args: Column*): Column = {
-    register(SparkSession.active)
-    call_function(name, args: _*)
-  }
+  def cosine_sim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
-  def cosine_sim(a: Column, b: Column): Column = call("cosine_sim", a, b)
+  def cosine_sim_d(a: Column, b: Column): Column = call_function("cosine_sim_d", a, b)
 
-  def cosine_sim_d(a: Column, b: Column): Column = call("cosine_sim_d", a, b)
+  def dot_d(a: Column, b: Column): Column = call_function("dot_d", a, b)
 
-  def dot_d(a: Column, b: Column): Column = call("dot_d", a, b)
-
-  def simhash60(tokens: Column): Column = call("simhash60", tokens)
+  def simhash60(tokens: Column): Column = call_function("simhash60", tokens)
 
   def srp_band_sigs(emb: Column, bands: Int, planes: Int): Column =
-    call("srp_band_sigs", emb,
+    call_function("srp_band_sigs", emb,
       org.apache.spark.sql.functions.lit(bands), org.apache.spark.sql.functions.lit(planes))
 
-  def lsh_band_sigs(text: Column): Column = call("lsh_band_sigs", text)
+  def lsh_band_sigs(text: Column): Column = call_function("lsh_band_sigs", text)
 
   /** Segment one token under a rank-ordered merge table (flattened
     * [l0, r0, l1, r1, …] — the [[graft.operators.Bpe]] trainer's
     * output). */
   def bpe_segment(token: Column, merges: Seq[String]): Column =
-    call("bpe_segment", token,
+    call_function("bpe_segment", token,
       org.apache.spark.sql.functions.lit(merges.toArray))
 
-  def repetition_stats(text: Column): Column = call("repetition_stats", text)
+  def repetition_stats(text: Column): Column = call_function("repetition_stats", text)
 
-  def fp_minmax(text: Column): Column = call("fp_minmax", text)
-
-  /** Exactly `sum(x.cast(DECIMAL(precision, scale)))` — same type,
-    * value, nulls and errors — for a DOUBLE `x` and precision ≤ 18, on
-    * unscaled longs ([[DecimalSum]]). The way to write an exact p ≤ 18
-    * sum. */
-  def decimal_sum(x: Column, precision: Int, scale: Int): Column =
-    call("decimal_sum", x,
-      org.apache.spark.sql.functions.lit(precision), org.apache.spark.sql.functions.lit(scale))
+  def fp_minmax(text: Column): Column = call_function("fp_minmax", text)
 
   /** Bloom filter over xxhash64 of `c` (binary, broadcastable). */
   def bloom_filter_agg(c: Column, estItems: Long, numBits: Long): Column =
-    call("bloom_filter_agg", org.apache.spark.sql.functions.xxhash64(c),
+    call_function("bloom_filter_agg", org.apache.spark.sql.functions.xxhash64(c),
       org.apache.spark.sql.functions.lit(estItems), org.apache.spark.sql.functions.lit(numBits))
 
   /** Membership probe against a [[bloom_filter_agg]] result. */
   def bloom_might_contain(bloom: Column, c: Column): Column =
-    call("bloom_might_contain", bloom,
+    call_function("bloom_might_contain", bloom,
       org.apache.spark.sql.functions.xxhash64(c))
-}
-
-/** `spark.sql.extensions=graft.plans.GraftSessionExtensions` registers
-  * the functions at session build time on every node of a cluster. */
-class GraftSessionExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.builders.foreach { case (name, cls, b) =>
-      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), b))
-    }
 }

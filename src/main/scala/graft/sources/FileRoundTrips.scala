@@ -3,7 +3,6 @@ package graft.sources
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions.decimal_sum
 
 /** Write-side MapReduce analogues surfaced as oracle-checked queries
   * (SURVEY §2.1 #14/#17): each writes through the real sink, reads
@@ -401,7 +400,7 @@ object FileRoundTrips {
     s.table(lt).join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_items"),
-        decimal_sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 18, 4).cast("double").as("revenue"))
+        sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)")).cast("double").as("revenue"))
   }
 
   /** Compaction target file size. Real deployments use 128 MB–1 GB;

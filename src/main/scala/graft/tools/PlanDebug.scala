@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector behind the PLANS.md review workflow: executes each
   * named SparkEntry query, then prints its formatted physical plan, so
   * AQE's final plan and the initial plan both show. Not part of the
@@ -12,12 +10,7 @@ object PlanDebug {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDebug <sfDir> <query>...")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(8, "graft-plan-debug")
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- args.drop(1)) {
       val df = graft.SparkEntry.queries(name)(spark, dir)

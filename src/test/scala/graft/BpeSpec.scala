@@ -47,7 +47,6 @@ class BpeSpec extends SparkSpecBase {
 
   test("bpe_segment kernel: randomized tokens and merge tables match the naive apply") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(53)
     // Alphabet includes a multi-byte codepoint: symbol boundaries must
     // be codepoints, not UTF-16 units (house rule).
@@ -73,7 +72,6 @@ class BpeSpec extends SparkSpecBase {
 
   test("trainer matches the naive reference on the classic planted corpus") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // Sennrich-style toy corpus: shared stems and suffixes force
     // multi-symbol merges ("es", "est", "est</w>", "lo", "low"...).
     val freqs = Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)

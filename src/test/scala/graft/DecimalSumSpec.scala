@@ -1,52 +1,65 @@
 package graft
 
-import graft.operators.Dedup
-import graft.plans.{DecimalSum, GraftFunctions, GraftSessionExtensions, VectorOps}
-import graft.plans.GraftFunctions.decimal_sum
+import graft.operators.{Dedup, Learn}
+import graft.plans.{DecimalSum, DecimalSums, VectorOps}
 import org.apache.spark.SparkThrowable
-import org.apache.spark.sql.{DataFrame, Row, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Cast, EvalMode, Expression, ExpressionInfo, Literal, NumericEvalContext}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.classic.ClassicConversions
-import org.apache.spark.sql.functions.{col, sum}
-import org.apache.spark.sql.types.{Decimal, DecimalType}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BindReferences, CaseWhen, Cast, EvalMode, Expression, Literal, NumericEvalContext}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Sum}
+import org.apache.spark.sql.functions.{col, expr, lit, sum, try_sum, when}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType}
 
-/** `decimal_sum(x, p, s)` against the expression it replaces,
-  * `sum(CAST(x AS DECIMAL(p, s)))`: same type, value, nulls and errors,
-  * on random magnitudes, rounding midpoints, special values, ANSI on
-  * and off, and site by site over the converted queries. */
+/** [[DecimalSums]] against Spark's own `sum(CAST(x AS DECIMAL(p, s)))`:
+  * the shapes it rewrites and the ones it leaves, then each query with
+  * the rule and without it — same type, value, nulls and errors — on
+  * random magnitudes, rounding midpoints, special values, ANSI on and
+  * off, and site by site over the queries that sum exactly. */
 class DecimalSumSpec extends SparkSpecBase {
 
-  private val AnsiKey = "spark.sql.ansi.enabled"
+  private val DecimalAggregates = "org.apache.spark.sql.catalyst.optimizer.DecimalAggregates"
 
-  private def withAnsi[A](on: Boolean)(f: => A): A = {
-    val saved = spark.conf.get(AnsiKey)
-    spark.conf.set(AnsiKey, on.toString)
-    try f finally spark.conf.set(AnsiKey, saved)
+  private def withAnsi[A](on: Boolean)(f: => A): A =
+    withConf("spark.sql.ansi.enabled" -> on.toString)(f)
+
+  /** Runs `f` with the optimizer rules `rules` left out. */
+  private def excluding[A](rules: String*)(f: => A): A = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", rules.mkString(","))
+    try f finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
+
+  /** `f` with [[DecimalSums]] in the optimizer, then without it. */
+  private def bothWays[A](excluded: String*)(f: => A): (A, A) =
+    (excluding(excluded: _*)(f), excluding(excluded :+ DecimalSums.ruleName: _*)(f))
+
+  /** The aggregate functions of `df`'s optimized plan. */
+  private def aggFunctions(df: DataFrame): Seq[AggregateFunction] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case ae: AggregateExpression => ae.aggregateFunction
+    }))
 
   private def frame(rows: Seq[(Int, Option[Double])]): DataFrame = {
     import spark.implicits._
     rows.toDF("k", "x").repartition(3)
   }
 
-  private def sparkSum(p: Int, s: Int) = sum(col("x").cast(s"decimal($p,$s)")).as("v")
-  private def kernelSum(p: Int, s: Int) = decimal_sum(col("x"), p, s).as("v")
+  private def exactSum(p: Int, s: Int) = sum(col("x").cast(s"decimal($p,$s)")).as("v")
 
-  /** Grouped and global results of both expressions, plus their types. */
-  private def assertSame(df: DataFrame, p: Int, s: Int): Unit = {
-    val a = df.groupBy("k").agg(sparkSum(p, s))
-    val b = df.groupBy("k").agg(kernelSum(p, s))
-    assert(a.schema == b.schema)
-    assert(b.schema("v").dataType == DecimalType(p + 10, s))
-    assert(a.orderBy("k").collect().toSeq == b.orderBy("k").collect().toSeq, s"($p,$s)")
-    val ga = df.agg(sparkSum(p, s)).collect().toSeq
-    val gb = df.agg(kernelSum(p, s)).collect().toSeq
-    assert(ga == gb, s"global ($p,$s)")
+  /** Grouped and global `exactSum` with the rule and without it: the
+    * rule's plans alone carry a [[DecimalSum]], and types and rows are
+    * equal. (A grouped sum over an empty relation plans no aggregate.) */
+  private def assertSame(df: DataFrame, p: Int, s: Int, excluded: String*): Unit = {
+    def run = {
+      val grouped = df.groupBy("k").agg(exactSum(p, s))
+      val global = df.agg(exactSum(p, s))
+      ((aggFunctions(grouped) ++ aggFunctions(global)).exists(_.isInstanceOf[DecimalSum]),
+        (grouped.schema, grouped.orderBy("k").collect().toSeq, global.collect().toSeq))
+    }
+    val ((kernel, result), (plain, expected)) = bothWays(excluded: _*)(run)
+    assert(kernel && !plain, s"($p,$s): the rule did not decide the plan")
+    assert(result._1("v").dataType == DecimalType(p + 10, s))
+    assert(result == expected, s"($p,$s)")
   }
 
   /** The error condition a query raises, or its sorted rows. */
@@ -111,22 +124,24 @@ class DecimalSumSpec extends SparkSpecBase {
     val nonFinite = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
     // p = 6, s = 2: DECIMAL(6,2) ends just below 10^4.
     val rows = (special ++ nonFinite).zipWithIndex.map { case (x, i) => (i % 4, Some(x)) }
+    // Spark's DecimalAggregates turns a p <= 8 sum into a long sum before
+    // the rule runs, so it is left out here for the rule to see p = 6.
     withAnsi(false) {
-      assertSame(frame(rows), 6, 2)
+      assertSame(frame(rows), 6, 2, DecimalAggregates)
       assertSame(frame(rows), 18, 4)
     }
     withAnsi(true) {
       val inRange = special.filter(x => math.abs(x) < 9999.99)
         .zipWithIndex.map { case (x, i) => (i % 4, Some(x)) }
-      assertSame(frame(inRange), 6, 2)
+      assertSame(frame(inRange), 6, 2, DecimalAggregates)
       // Out of range is an error under ANSI; NaN and ±Inf go as the cast says.
       // Those errors fail their tasks by design, so their logs are muted.
       spark.sparkContext.setLogLevel("OFF")
       try for (bad <- Seq(9999.995, -10000.0, 1e300) ++ nonFinite) {
         val df = frame(inRange :+ ((1, Some(bad))))
-        val want = outcome(df.groupBy("k").agg(sparkSum(6, 2)))
+        val (got, want) = bothWays(DecimalAggregates)(outcome(df.groupBy("k").agg(exactSum(6, 2))))
         if (!bad.isNaN && !bad.isInfinite) assert(want.isLeft, s"x=$bad: $want")
-        assert(outcome(df.groupBy("k").agg(kernelSum(6, 2))) == want, s"x=$bad")
+        assert(got == want, s"x=$bad")
       } finally spark.sparkContext.setLogLevel("WARN")
     }
   }
@@ -137,8 +152,8 @@ class DecimalSumSpec extends SparkSpecBase {
       assertSame(frame(rows), 18, 2)
       val empty = frame(rows).filter(col("k") > 99)
       assertSame(empty, 18, 2)
-      assert(empty.agg(kernelSum(18, 2)).head().isNullAt(0))
-      assert(frame(rows).groupBy("k").agg(kernelSum(18, 2))
+      assert(empty.agg(exactSum(18, 2)).head().isNullAt(0))
+      assert(frame(rows).groupBy("k").agg(exactSum(18, 2))
         .filter(col("k") === 1).head().isNullAt(1))
     }
   }
@@ -176,69 +191,86 @@ class DecimalSumSpec extends SparkSpecBase {
     }
   }
 
-  test("SQL face: decimal_sum resolves, checks its literals and needs a DOUBLE") {
-    GraftFunctions.register(spark)
-    val r = spark.sql(
-      "SELECT decimal_sum(x, 18, 4) AS v FROM VALUES (0.145D), (2.675D), (NULL) AS t(x)")
-    assert(r.schema("v").dataType == DecimalType(28, 4))
-    assert(r.head().getDecimal(0).compareTo(new java.math.BigDecimal("2.8200")) == 0)
-    val bad = intercept[Exception](spark.sql("SELECT decimal_sum(x, 19, 4) FROM VALUES (1.0D) AS t(x)"))
-    assert(bad.getMessage.contains("precision <= 18"), bad.getMessage)
-    val notDouble = intercept[Exception](
-      spark.sql("SELECT decimal_sum(x, 18, 4) FROM VALUES (1L) AS t(x)").collect())
-    assert(notDouble.getMessage.contains("DOUBLE"), notDouble.getMessage)
-  }
-
-  test("GraftSessionExtensions injects exactly GraftFunctions.builders") {
-    val injected = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val ext = new SparkSessionExtensions {
-      override def injectFunction(
-          f: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)): Unit =
-        injected += (f._1.funcName -> f._2.getClassName)
+  test("DecimalSums rewrites plain, folded-conditional and SQL-text narrow sums") {
+    import spark.implicits._
+    val df = Seq((1, true, Some(1.25)), (1, false, Some(-2.5)), (2, true, None),
+      (2, true, Some(0.145)), (3, false, Some(2.675))).toDF("k", "c", "x").repartition(2)
+    val dec = "decimal(18,4)"
+    val shapes = Seq(
+      "plain" -> sum(col("x").cast(dec)),
+      "else 0.0" -> sum(when(col("c"), col("x")).otherwise(lit(0.0)).cast(dec)),
+      "null else" -> sum(when(col("c"), col("x")).cast(dec)),
+      "SQL text" -> expr("SUM(CAST(x AS DECIMAL(18,4)))"))
+    for (ansi <- Seq(false, true); (what, shape) <- shapes) withAnsi(ansi) {
+      def q = df.groupBy("k").agg(shape.as("v"))
+      val (kernel, plain) = bothWays()(aggFunctions(q))
+      assert(kernel.collect { case DecimalSum(_, 18, 4, `ansi`) => 1 }.sum == 1, s"$what: $kernel")
+      // Without the rule the conditional arrives folded into its branches.
+      val folded = if (what.contains("else")) classOf[CaseWhen] else classOf[Cast]
+      assert(plain.collect { case s: Sum => s.child.getClass } == Seq(folded), s"$what: $plain")
+      val (got, want) = bothWays()(q.orderBy("k").collect().toSeq)
+      assert(got == want, what)
     }
-    new GraftSessionExtensions().apply(ext)
-    val want = GraftFunctions.builders.map { case (n, c, _) => n -> c.getName }
-    assert(injected.toSeq == want)
-    assert(injected.map(_._1).toSet.contains("bpe_segment"))
-    assert(injected.map(_._1).toSet.contains("decimal_sum"))
+    val v = df.agg(expr("SUM(CAST(x AS DECIMAL(18,4)))").as("v")).head().getDecimal(0)
+    assert(v.compareTo(new java.math.BigDecimal("1.5700")) == 0)
   }
 
-  /** Puts Spark's `sum(CAST(x AS DECIMAL(p, s)))` back in place of every
-    * [[DecimalSum]], so one query runs both ways. */
-  private final class ToSparkSum extends Rule[LogicalPlan] {
-    var rewrites = 0
-    def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-      case ae @ AggregateExpression(d: DecimalSum, _, _, _, _) =>
-        rewrites += 1
-        val mode = EvalMode.fromBoolean(d.ansi)
-        ae.copy(aggregateFunction = Sum(
-          Cast(d.child, DecimalType(d.precision, d.scale), None, mode), NumericEvalContext(mode)))
+  test("DecimalSums leaves try_sum, mixed modes, non-DOUBLE input and p > 18 alone") {
+    val df = spark.range(4).select((col("id") * 1.25).as("x"), col("id").as("n"))
+    val shapes = Seq(
+      "try_sum" -> df.agg(try_sum(col("x").cast("decimal(18,4)"))),
+      "TRY cast" -> df.agg(sum(col("x").try_cast("decimal(18,4)"))),
+      "BIGINT input" -> df.agg(sum(col("n").cast("decimal(18,4)"))),
+      "p = 19" -> df.agg(sum(col("x").cast("decimal(19,4)"))),
+      "a literal no DOUBLE casts to" -> df.agg(sum(when(col("n") > 1, col("x").cast("decimal(18,4)"))
+        .otherwise(lit(BigDecimal("12345678901234.5678"))))))
+    for ((what, q) <- shapes) {
+      val fns = aggFunctions(q)
+      assert(fns.nonEmpty && !fns.exists(_.isInstanceOf[DecimalSum]), s"$what: $fns")
+    }
+    // An ANSI cast under a LEGACY sum and the reverse, given to the rule
+    // directly: a Column or SQL sum takes both modes from one setting.
+    val x = AttributeReference("x", DoubleType)()
+    val modes = Seq(EvalMode.LEGACY, EvalMode.ANSI)
+    for (castMode <- modes; sumMode <- modes) {
+      val sumOfCast = Sum(Cast(x, DecimalType(18, 4), None, castMode),
+        NumericEvalContext(sumMode))
+      val plan = Aggregate(Nil,
+        Seq(Alias(sumOfCast.toAggregateExpression(), "v")()), LocalRelation(x))
+      val rewritten = DecimalSums(plan).expressions.exists(_.exists(_.isInstanceOf[DecimalSum]))
+      assert(rewritten == (castMode == sumMode), s"cast $castMode, sum $sumMode")
     }
   }
-
-  /** Every query with a converted sum site (als_rank1's site builds a
-    * memoized ratings file once per JVM, so it is left to the oracle). */
-  private val converted = Seq("tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6", "tpch_q7",
-    "tpch_q8", "tpch_q9", "tpch_q10", "tpch_q11", "tpch_q14", "tpch_q15", "tpch_q17",
-    "tpch_q19", "tpch_q22", "events_rfm", "grouped_regression", "winsorize_values",
-    "ab_test", "join_bloom", "chain_pipeline", "bucketed_join")
 
   test("site by site at sf0.01: each converted query equals its sum(cast) form") {
     val dir = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString
-    def rows(name: String): Seq[String] = {
-      Dedup.clearCaches()
-      SparkEntry.queries(name)(spark, dir).collect().map(_.toString).sorted.toIndexedSeq
-    }
-    converted.foreach { name =>
-      val kernel = rows(name)
-      val rule = new ToSparkSum
-      val experimental = ClassicConversions.castToImpl(spark).experimental
-      experimental.extraOptimizations = Seq(rule)
-      val old = try rows(name) finally experimental.extraOptimizations = Nil
-      assert(rule.rewrites > 0, s"$name has no decimal_sum left to compare")
-      assert(kernel.nonEmpty, name)
-      assert(kernel == old, s"$name: ${kernel.zip(old).find(p => p._1 != p._2)}")
+    // als_rank1 reads its ratings back from a file written once per JVM,
+    // so its site is compared as the relation that file holds.
+    val sites = DecimalSumSpec.exactSumQueries.map(n => n -> SparkEntry.queries(n)) :+
+      ("als_rank1" -> (Learn.alsRatingPairs _))
+    sites.foreach { case (name, build) =>
+      def run = withConf(ShuffleCensus.aqeOff) {
+        Dedup.clearCaches()
+        val df = build(spark, dir)
+        (sumsOnLongs(df.queryExecution.executedPlan),
+          df.collect().map(_.toString).sorted.toIndexedSeq)
+      }
+      val ((kernel, rows), (plain, old)) = bothWays()(run)
+      assert(kernel && !plain, s"$name: the rule did not decide the plan")
+      assert(rows.nonEmpty, name)
+      assert(rows == old, s"$name: ${rows.zip(old).find(p => p._1 != p._2)}")
     }
     Dedup.clearCaches()
   }
+}
+
+object DecimalSumSpec {
+  /** Every registered query whose plan sums an exact narrow decimal of
+    * a DOUBLE. (als_rank1 sums one too, in the rating relation it writes
+    * once per JVM and then reads back.) */
+  val exactSumQueries: Seq[String] = Seq("tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6",
+    "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q10", "tpch_q11", "tpch_q14", "tpch_q15",
+    "tpch_q17", "tpch_q19", "tpch_q22", "events_rfm", "grouped_regression",
+    "winsorize_values", "ab_test", "join_bloom", "chain_pipeline", "bucketed_join",
+    "sql_frontend")
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 class DedupSimilaritySpec extends SparkSpecBase {
 
   test("cosine_sim expression: orthogonal, identical, and known vectors") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1f, 0f), Array(0f, 1f), 0.0),
@@ -21,7 +20,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("cosine_sim participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     val plan = explainString(
       Tables.embeddings(spark, sfDir)
         .select(GraftFunctions.cosine_sim(col("embedding"), col("embedding")).as("c")))
@@ -29,7 +27,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("srp_band_sigs participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     val plan = explainString(
       Tables.embeddings(spark, sfDir)
         .select(GraftFunctions.srp_band_sigs(col("embedding"), 8, 6).as("sigs")))
@@ -37,7 +34,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("simhash60: identical token sets collide, disjoint ones do not") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       Tuple1(Seq("spark", "hash", "join", "scan")),
@@ -258,7 +254,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("srp_band_sigs accepts any integral literal and rejects non-literals clearly") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     // Spark long literals (8L) used to ClassCastException on the raw
     // eval().asInstanceOf[Int]; now any integral literal works.
@@ -278,7 +273,6 @@ class DedupSimilaritySpec extends SparkSpecBase {
   }
 
   test("lsh_band_sigs expression matches the declarative salted-md5-chunk-minima formula") {
-    GraftFunctions.register(spark)
     import graft.functions.TextFunctions
     val docs = Tables.documents(spark, sfDir)
     val viaExpr = docs.select(col("doc_id"),

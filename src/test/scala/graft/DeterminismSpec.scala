@@ -162,73 +162,11 @@ class DeterminismSpec extends SparkSpecBase {
     assert(row.getDecimal(0).compareTo(row.getDecimal(1)) == 0)
   }
 
-  /** `sum(...)` calls whose argument is one term holding a
-    * `.cast("decimal(p,s)")` with p ≤ 18: Spark's BigDecimal-per-row
-    * sum of a narrow decimal, which `decimal_sum` computes exactly on
-    * longs. A top-level arithmetic operator in the argument (a
-    * right-sized decimal product, like nb_classify's (14,12)×(10,0))
-    * makes it a wide-decimal sum, which is left alone. */
-  private def narrowDecimalSums(src: String): Seq[String] = {
-    def close(open: Int): Int = {
-      var depth = 0; var i = open; var inStr = false
-      while (i < src.length) {
-        val c = src.charAt(i)
-        if (inStr) { if (c == '\\') i += 1 else if (c == '"') inStr = false }
-        else if (c == '"') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return i }
-        i += 1
-      }
-      src.length - 1
-    }
-    // Depth-0 text of the argument with string literals blanked out.
-    def topLevel(arg: String): String = {
-      val b = new StringBuilder; var depth = 0; var inStr = false
-      arg.foreach { c =>
-        if (inStr) { if (c == '"') inStr = false }
-        else if (c == '"') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0) b += c
-      }
-      b.toString
-    }
-    val narrowCast = """\.cast\("decimal\((\d+),\s*\d+\)"\)""".r
-    """(?<![\w.])sum\(""".r.findAllMatchIn(src).toSeq.flatMap { m =>
-      val arg = src.substring(m.end, close(m.end - 1))
-      val narrow = narrowCast.findAllMatchIn(arg).exists(_.group(1).toInt <= 18)
-      if (narrow && !topLevel(arg).exists("*+-/%".contains(_))) Some(s"sum($arg)") else None
-    }
-  }
-
-  test("pin: exact DECIMAL(p<=18) sums in src/main go through decimal_sum") {
-    import scala.jdk.CollectionConverters._
-    // Witnesses: the detector flags both narrow shapes and spares the
-    // right-sized wide product.
-    assert(narrowDecimalSums(
-      """sum((col("a") * col("b")).cast("decimal(18,4)")).cast("double")""").size == 1)
-    assert(narrowDecimalSums("""sum(when(col("f"), col("a").cast("decimal(18,4)"))
-      .otherwise(lit(0).cast("decimal(18,4)")))""").size == 1)
-    assert(narrowDecimalSums("""sum(col("ll").cast("decimal(14,12)") *
-      col("cnt").cast("decimal(10,0)"))""").isEmpty)
-    assert(narrowDecimalSums("""sum(col("v").cast("decimal(28,10)"))""").isEmpty)
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => p.toString -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).toSeq
-    val hits = files.flatMap { case (f, src) => narrowDecimalSums(src).map(h => s"$f: $h") }
-    if (hits.nonEmpty)
-      fail("write these as GraftFunctions.decimal_sum(x, p, s):\n" + hits.mkString("\n"))
-    val uses = files.map(_._2.split("decimal_sum\\(", -1).length - 1).sum
-    assert(uses >= 20, s"only $uses decimal_sum( calls in src/main: is the pin still reading it?")
-  }
-
   /** `sum` aggregates over a DECIMAL(p ≤ 18) input anywhere in a
     * physical plan the census reaches (main tree, subqueries, cache
-    * builds): Spark sums those with a BigDecimal per row, which
-    * `decimal_sum` computes exactly on longs. The optimizer already
-    * turns p ≤ 8 sums into long sums (the input becomes an
-    * UnscaledValue), so they are not flagged. */
+    * builds): Spark sums those with a BigDecimal per row. A p ≤ 8 sum is
+    * a long sum already (its input becomes an UnscaledValue), and
+    * [[graft.plans.DecimalSums]] makes a sum of a DOUBLE cast a DecimalSum. */
   private def narrowPlanSums(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
     import org.apache.spark.sql.types.DecimalType
@@ -241,34 +179,36 @@ class DeterminismSpec extends SparkSpecBase {
   }
 
   test("pin: no registered query's plan sums a DECIMAL(p<=18) with Spark's sum") {
-    // The plan-level face of the source pin above: it also sees a
-    // narrow decimal that reached `sum` through a variable or a column
-    // cast in an earlier step (tpch_q8's `sum(volume)` shape).
+    // It also sees a narrow decimal that reached `sum` through a column
+    // cast in an earlier step, which the rule cannot rewrite: it sees
+    // only a cast inside the sum.
     import org.apache.spark.sql.functions.{col, sum}
     withConf(ShuffleCensus.aqeOff) {
       val cast = spark.range(10).withColumn("v", (col("id") * 1.25).cast("decimal(12,2)"))
       assert(narrowPlanSums(cast.agg(sum(col("v"))).queryExecution.executedPlan).nonEmpty,
         "a sum over a column cast to decimal(12,2) one step earlier escaped the pin")
-      val exact = spark.range(10).agg(
-        graft.plans.GraftFunctions.decimal_sum(col("id") * 1.25, 12, 2))
+      val exact = spark.range(10).agg(sum((col("id") * 1.25).cast("decimal(12,2)")))
       assert(narrowPlanSums(exact.queryExecution.executedPlan).isEmpty,
-        "decimal_sum false-positived the pin")
+        "the rule left a sum of a DOUBLE cast to Spark's sum")
     }
     val hits = surface.census.flatMap { case (name, plan) =>
       val sums = narrowPlanSums(plan)
-      if (sums == narrowSumWhitelist.get(name).fold(Seq.empty[String])(_._2)) None
-      else Some(s"$name: ${sums.mkString("; ")}")
+      if (sums.isEmpty) None else Some(s"$name: ${sums.mkString("; ")}")
     }
     assert(hits.isEmpty,
-      "write these as GraftFunctions.decimal_sum(x, p, s), or re-pin a justified one:\n" +
+      "write these as sum(x.cast(\"decimal(p,s)\")) of a DOUBLE x, the cast inside " +
+        "the sum (DecimalSums sums it on longs):\n" +
         hits.mkString("\n"))
   }
 
-  /** Declared narrow `sum`s: query → (why it stays Spark's `sum`, the
-    * pinned signatures). Observed != pinned fails in either direction. */
-  private val narrowSumWhitelist: Map[String, (String, Seq[String])] = Map(
-    "sql_frontend" -> (
-      "the query is one SQL string that runs verbatim on Spark SQL and on " +
-        "DuckDB, whose text is its own oracle; DuckDB has no decimal_sum",
-      Seq("sum(CAST((lineitem.l_extendedprice * (1.0D - lineitem.l_discount)) AS DECIMAL(18,4)))")))
+  test("pin: exactly the queries with an exact narrow sum plan a DecimalSum") {
+    // The plan pin above also passes when no query sums at all; this one
+    // fails if the rule stops rewriting any site, or rewrites a new one.
+    val observed = surface.census.collect { case (name, plan) if sumsOnLongs(plan) => name }
+    assert(observed.sorted == DecimalSumSpec.exactSumQueries.sorted)
+    withConf(ShuffleCensus.aqeOff) {
+      assert(sumsOnLongs(graft.operators.Learn.alsRatingPairs(spark, sfDir)
+        .queryExecution.executedPlan), "als_rank1's rating relation")
+    }
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{Dedup, Similarity}
 import graft.plans.GraftFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bucket-occupancy probe for the two bucketed embedding-dedup paths,
@@ -34,15 +34,8 @@ object OccupancyProbe {
       count(lit(1)).as("nonempty")).collect()(0)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-occupancy-probe")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4, "graft-occupancy-probe")
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
     for (dir <- args) {
       val e = Tables.embeddings(spark, dir)
       val planes = Dedup.embPlanes(spark, dir)

@@ -322,7 +322,6 @@ class RelationalSpec extends SparkSpecBase {
   }
 
   test("join_bloom: bloom pre-filter result equals the plain join, reduction is real") {
-    graft.plans.GraftFunctions.register(spark)
     import graft.plans.GraftFunctions.{bloom_filter_agg, bloom_might_contain}
     val got = Relational.joinBloom(spark, sfDir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap

@@ -24,6 +24,12 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
+  /** Whether a plan reachable from `plan` (subqueries and cache builds
+    * included) sums with a [[graft.plans.DecimalSum]]. */
+  def sumsOnLongs(plan: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    ShuffleCensus.reachable(plan).exists(_.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.plans.DecimalSum]))))
+
   def explainString(df: DataFrame): String = {
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(out) { df.explain("formatted") }
@@ -45,13 +51,7 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpecBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(4, "graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }

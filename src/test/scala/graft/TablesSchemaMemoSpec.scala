@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * load of a file version infers it, every later load reads with it.
   * These checks pin that the memo changes no schema, saves the
   * inference job, notices a replaced file, and (with it) that
-  * `GraftFunctions.register` is idempotent per session. */
+  * `GraftFunctions.install` is idempotent per session. */
 class TablesSchemaMemoSpec extends SparkSpecBase {
 
   private def jobsDuring(f: => Unit): Int = {
@@ -95,10 +95,11 @@ class TablesSchemaMemoSpec extends SparkSpecBase {
     }
   }
 
-  test("GraftFunctions.register twice leaves the registry unchanged") {
+  test("GraftFunctions.install is idempotent and reaches new sessions") {
+    import graft.plans.{DecimalSums, GraftFunctions}
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val registry = org.apache.spark.sql.classic.ClassicConversions
-      .castToImpl(spark).sessionState.functionRegistry
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val registry = castToImpl(spark).sessionState.functionRegistry
     val names = Seq("cosine_sim", "cosine_sim_d", "dot_d", "simhash60",
       "srp_band_sigs", "lsh_band_sigs", "bpe_segment", "repetition_stats",
       "fp_minmax", "bloom_filter_agg", "bloom_might_contain")
@@ -108,15 +109,28 @@ class TablesSchemaMemoSpec extends SparkSpecBase {
       val id = FunctionIdentifier(n)
       (registry.lookupFunction(id).orNull, registry.lookupFunctionBuilder(id).orNull)
     }
-    graft.plans.GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val first = snapshot()
     assert(first.forall { case (info, b) => info != null && b != null })
     val listed = registry.listFunction().toSet
-    graft.plans.GraftFunctions.register(spark)
+    GraftFunctions.install(spark)
     val second = snapshot()
     first.zip(second).zip(names).foreach { case (((i1, b1), (i2, b2)), n) =>
       assert((i1 eq i2) && (b1 eq b2), s"$n was re-registered")
     }
     assert(registry.listFunction().toSet == listed)
+    // An install per query build must not grow the optimizer's rule list.
+    assert(castToImpl(spark).experimental.extraOptimizations.count(_ == DecimalSums) == 1)
+
+    // A new session has its own registry and optimizer rules, as a
+    // session a harness builds by hand does: each query build installs.
+    val fresh = spark.newSession()
+    assert(castToImpl(fresh).experimental.extraOptimizations.isEmpty)
+    Seq("tpch_q1", "tpch_q5").foreach { name =>
+      val plan = SparkEntry.queries(name)(fresh, sfDir).queryExecution.optimizedPlan
+      assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.plans.DecimalSum]))),
+        s"$name on a new session sums with Spark's sum")
+    }
+    assert(castToImpl(fresh).experimental.extraOptimizations == Seq(DecimalSums))
   }
 }

@@ -75,26 +75,48 @@ object EventStreams {
 
   private val replaySeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Start a replay's streaming query with its state partition count
-    * taken from the replay's input bound. A streaming query pins
-    * `spark.sql.shuffle.partitions` at start as its state partition
-    * count, and each state partition writes its own state-store and
-    * checkpoint files every batch, so a bounded run pays per
-    * partition, not per row:
-    *  - a `capped` input ([[EventReplayCap]], [[ReplayCap]]) holds at
-    *    most the cap's rows at every sf: one state partition;
-    *  - a whole-table input grows with sf: `min(4, defaultParallelism)`
-    *    partitions, one task wave (a production stream sizes this to
-    *    its state volume).
-    * Scoped set/restore — queries run sequentially through
-    * Verify/Bench. */
-  private def startReplay(s: SparkSession, capped: Boolean)(
+  /** Start a replay's streaming query under the three session settings
+    * every replay shares, each set for the `start` call and restored
+    * after it (the query's cloned session keeps its own copy; queries
+    * run sequentially through Verify/Bench):
+    *  - `spark.sql.shuffle.partitions`, which a streaming query pins at
+    *    start as its state partition count. Each state partition writes
+    *    its own state-store and checkpoint files every batch, so a
+    *    bounded run pays per partition, not per row, and the count
+    *    follows the replay's input bound: a `capped` input
+    *    ([[EventReplayCap]], [[ReplayCap]]) holds at most the cap's rows
+    *    at every sf, one state partition; a whole-table input grows with
+    *    sf, `min(4, defaultParallelism)` partitions, one task wave (a
+    *    production stream sizes this to its state volume).
+    *  - `spark.sql.artifact.isolation.enabled=false`. With Spark 4's
+    *    per-session artifact isolation, the query's cloned session gets a
+    *    fresh executor class loader, the codegen cache (keyed by class
+    *    loader) misses, and every replay recompiles its generated classes
+    *    and warms them up in the JIT again. graft adds no session
+    *    artifacts, so the clone keeps the default loader and a repeated
+    *    replay compiles nothing.
+    *  - `spark.sql.streaming.checkpointFileManagerClass` =
+    *    [[LocalCheckpointFiles]], which publishes the offset, commit and
+    *    state-store files of a `file:` checkpoint with java.nio instead
+    *    of Hadoop's FileContext (other schemes keep Spark's manager). */
+  private[graft] def startReplay(s: SparkSession, capped: Boolean)(
       start: => StreamingQuery): StreamingQuery = {
-    val partsKey = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(partsKey)
     val parts = if (capped) 1 else math.min(4, s.sparkContext.defaultParallelism)
-    try { s.conf.set(partsKey, parts.toString); start }
-    finally s.conf.set(partsKey, saved)
+    withSessionConf(s,
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.streaming.checkpointFileManagerClass" -> classOf[LocalCheckpointFiles].getName)(start)
+  }
+
+  /** Run `body` with `settings` set in `s`'s conf, then put back each
+    * key's previous value (or unset it), also when `body` throws. */
+  private def withSessionConf[T](s: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val saved = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    try { settings.foreach { case (k, v) => s.conf.set(k, v) }; body }
+    finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
   }
 
   /** Run a streaming plan to quiescence against a one-micro-batch
@@ -726,12 +748,7 @@ object EventStreams {
   private[graft] def twoBatchReplay(s: SparkSession, dir: String, mode: OutputMode)(
       plan: Dataset[Event] => DataFrame): DataFrame = {
     import s.implicits._
-    val events = graft.Tables.events(s, dir)
-      .filter(col("event_id") < EventReplayCap)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event].collect()
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    val (b1, b2) = events.splitAt(events.length / 2)
+    val (b1, b2) = cappedHalves(s, dir)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
     settleWith(s, plan(input.toDS()), mode, capped = true) { q =>
@@ -740,6 +757,18 @@ object EventStreams {
       input.addData(b2)
       q.processAllAvailable()
     }
+  }
+
+  /** [[twoBatchReplay]]'s two micro-batches: the capped event window in
+    * (ts, event_id) order, split at its midpoint. */
+  private[graft] def cappedHalves(s: SparkSession, dir: String): (Array[Event], Array[Event]) = {
+    import s.implicits._
+    val events = graft.Tables.events(s, dir)
+      .filter(col("event_id") < EventReplayCap)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      .as[Event].collect()
+      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
+    events.splitAt(events.length / 2)
   }
 
   private def sessionizeReplayWith(s: SparkSession, dir: String)(
@@ -1184,16 +1213,9 @@ object EventStreams {
     * provider after. The provider is read once at query START, so a
     * scoped set covers the whole bounded run; queries run
     * sequentially through Verify/Bench (the same scoping rule as
-    * [[startReplay]]'s state-partition override). */
-  private[graft] def withRocksDbState[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = s.conf.getOption(key)
-    try { s.conf.set(key, RocksDbProvider); body }
-    finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+    * [[startReplay]]'s settings). */
+  private[graft] def withRocksDbState[T](s: SparkSession)(body: => T): T =
+    withSessionConf(s, "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider)(body)
 
   /** #38b with the state store on RocksDB — the DEPLOYMENT state
     * tier (SURVEY's streaming-gap note claimed this was out of

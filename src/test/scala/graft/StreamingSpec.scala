@@ -718,6 +718,41 @@ class StreamingSpec extends SparkSpecBase {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("a repeated replay compiles no generated classes: its session keeps the default class loader") {
+    // Spark's codegen cache is keyed by class loader: a per-session
+    // loader would make every replay recompile its classes.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def replay() = EventStreams.funnelStreamReplay(spark, sfDir).collect()
+    replay()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    replay()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles)
+  }
+
+  test("startReplay sets its three session settings for start and restores them, also when start throws") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.artifact.isolation.enabled",
+      "spark.sql.streaming.checkpointFileManagerClass")
+    def settings = keys.map(spark.conf.getOption)
+    val during = Seq(Some("1"), Some("false"), Some(classOf[graft.streaming.LocalCheckpointFiles].getName))
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      val before = settings
+      assert(before(2).isEmpty)
+      var seen = Seq.empty[Option[String]]
+      EventStreams.startReplay(spark, capped = true) { seen = settings; null }
+      assert(seen == during)
+      assert(settings == before)
+      seen = Nil
+      intercept[IllegalStateException] {
+        EventStreams.startReplay(spark, capped = true) {
+          seen = settings
+          throw new IllegalStateException("start failed")
+        }
+      }
+      assert(seen == during)
+      assert(settings == before)
+    }
+  }
+
   test("attribution replay surface equals the batch window face on the capped corpus") {
     val got = EventStreams.attributionStreamReplay(spark, sfDir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
